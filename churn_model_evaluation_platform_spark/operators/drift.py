@@ -8,15 +8,22 @@ churn-model-evaluation.json:1170). We implement KS-with-p-value natively:
 
   KS statistic = max over x of |ECDF_ref(x) - ECDF_cur(x)|
 
-as a pure DataFrame aggregation: pool both samples tagged with indicator
-columns, compute tie-aware running counts ordered by value, take the max
-absolute normalized difference. Two physical strategies:
+as a pure DataFrame aggregation: melt both samples to long
+``(keys…, v)`` rows, tie pre-aggregate to one row per distinct value
+with the reference/current counts, take per-key running counts ordered
+by value, and finish with the max absolute normalized difference and
+its asymptotic p-value. ``value_drift``, ``ks_2samp`` and
+``value_drift_by_window`` all run that one kernel (``_ks``).
 
-- ``ks_2samp``: single huge column — scalable range-partitioned prefix sum
-  (no single-partition window; see functions/stats.py).
-- ``value_drift``: many modest columns at once (the monitoring batch case)
-  — melt to long ``(column, value)`` and window per column, so all columns
-  are computed in ONE pass over one shuffle, parallel across columns.
+The running counts take one of two routes, picked by one rule: a column
+whose distinct-count estimate is at most ``WINDOWED_MAX_DISTINCT`` takes
+the per-key window (one reducer per column; no boundary pass, which
+dominates monitoring-sized batches); any other column — including one
+without an estimate — takes ``functions/stats.grouped_prefix_sum``
+(each column's value range split over balanced buckets, so no serial
+stage at any cardinality). The estimate is an input measurement (one
+``estimate_distinct_counts`` HLL pass, or catalog column stats), never a
+caller-chosen strategy, and both routes produce identical rows.
 
 p-values use the asymptotic Kolmogorov series (functions/stats.py) since
 scipy is deliberately not a dependency. Unit tests pin values against
@@ -27,6 +34,8 @@ keep the stat pluggable.
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -40,6 +49,7 @@ from ..functions.stats import (
 
 P_VALUE_DRIFT_THRESHOLD = 0.05  # churn_prediction_pipeline.py:419
 DATASET_DRIFT_SHARE = 0.5  # churn_prediction_pipeline.py:415
+WINDOWED_MAX_DISTINCT = 250_000  # per-column single-reducer comfort zone
 
 
 def _pool(
@@ -59,109 +69,82 @@ def _pool(
     return r.unionAll(c)
 
 
-def ks_2samp(
-    ref: DataFrame,
-    cur: DataFrame,
-    column: str,
-    strategy: str = "prefix",
-    distinct_estimate: int | None = None,
+def _long(df: DataFrame, columns: list[str], *ids: Column) -> DataFrame:
+    """Melt ``columns`` (cast to double) to ``(ids…, column, v)`` rows,
+    nulls dropped."""
+    wide = df.select(*ids, *[F.col(c).cast("double").alias(c) for c in columns])
+    return wide.unpivot(wide.columns[: len(ids)], columns, "column", "v").where(
+        F.col("v").isNotNull()
+    )
+
+
+def _tie_counts(
+    ref_long: DataFrame, cur_long: DataFrame, keys: list[str]
 ) -> DataFrame:
-    """Two-sample KS over one (possibly huge) column.
+    """Pool two long frames into one row per (keys…, v) with the
+    reference count ``r`` and current count ``c`` at v. Map-side partial
+    aggregation shrinks the shuffle to each key's cardinality, and every
+    later ordering sees one row per value, so ties need no special case."""
 
-    Returns a single row ``(ks_stat double, p_value double, n_ref long,
-    n_cur long)``. Scales: the only global ordering is done via
-    range-partitioned prefix sums; everything else is map-side.
+    def tag(df: DataFrame, is_ref: int) -> DataFrame:
+        return df.select(
+            *keys,
+            "v",
+            F.lit(is_ref).alias("is_ref"),
+            F.lit(1 - is_ref).alias("is_cur"),
+        )
 
-    ``strategy``: ``"prefix"`` (default — keeps plan construction fully
-    lazy and the plan single-reducer-free at ANY cardinality) uses the
-    range-partitioned prefix sum; ``"windowed"`` uses a plain ordered
-    window over the tie-grouped values (single reducer — fine at
-    moderate cardinality, skips the boundary pass); ``"auto"`` picks by
-    the column's distinct count. Pass ``distinct_estimate`` (e.g. from a
-    pass the caller already runs — ``estimate_distinct_counts`` — or
-    table statistics) and auto routing stays FULLY LAZY: no job at
-    plan-construction. Without it auto falls back to running the
-    one-pass HLL estimate eagerly — opt in only where the caller
-    executes immediately. All strategies produce identical rows.
+    return (
+        tag(ref_long, 1)
+        .unionAll(tag(cur_long, 0))
+        .groupBy(*keys, "v")
+        .agg(F.sum("is_ref").alias("r"), F.sum("is_cur").alias("c"))
+    )
+
+
+def _ks(counts: DataFrame, keys: list[str], prefix: bool = False) -> DataFrame:
+    """The KS kernel: tie counts ``(keys…, v, r, c)`` → one row per key
+    ``(keys…, ks_stat, p_value, n_ref, n_cur)``.
+
+    Running counts come from a window partitioned by the keys, or — with
+    ``prefix`` and a single key — from ``grouped_prefix_sum``. A key with
+    no values on one side has no ECDF there: its ks_stat and p_value are
+    null instead of a division-by-zero error.
     """
-    if strategy == "auto":
-        est = (
-            distinct_estimate
-            if distinct_estimate is not None
-            else estimate_distinct_counts(ref, cur, [column])[column]
+    if prefix:
+        (key,) = keys
+        cums = grouped_prefix_sum(counts, key, "v", ["r", "c"]).select(
+            key,
+            "cum_r",
+            "cum_c",
+            F.col("tot_r").alias("n_ref"),
+            F.col("tot_c").alias("n_cur"),
         )
-        strategy = "windowed" if est <= WINDOWED_MAX_DISTINCT else "prefix"
-    if strategy == "windowed":
-        raw = _pool(ref, cur, column)
-        pooled = raw.groupBy("v").agg(
-            F.sum("is_ref").alias("is_ref"), F.sum("is_cur").alias("is_cur")
+    else:
+        w = Window.partitionBy(*keys).orderBy("v")  # 1 row per v → tie-safe
+        tot = Window.partitionBy(*keys)
+        cums = counts.select(
+            *keys,
+            F.sum("r").over(w).alias("cum_r"),
+            F.sum("c").over(w).alias("cum_c"),
+            F.sum("r").over(tot).alias("n_ref"),
+            F.sum("c").over(tot).alias("n_cur"),
         )
-        w = Window.orderBy("v")  # 1 row per distinct v → tie-safe
-        tot = Window.partitionBy()
-        cums = pooled.select(
-            F.sum("is_ref").over(w).alias("cum_is_ref"),
-            F.sum("is_cur").over(w).alias("cum_is_cur"),
-            F.sum("is_ref").over(tot).alias("tot_is_ref"),
-            F.sum("is_cur").over(tot).alias("tot_is_cur"),
-        )
-        stat = cums.agg(
-            F.max(
-                F.abs(
-                    F.col("cum_is_ref") / F.col("tot_is_ref")
-                    - F.col("cum_is_cur") / F.col("tot_is_cur")
-                )
-            ).alias("ks_stat"),
-            F.first("tot_is_ref").alias("n_ref"),
-            F.first("tot_is_cur").alias("n_cur"),
-        )
-        return stat.select(
-            "ks_stat",
-            ks_pvalue_expr(
-                F.col("ks_stat"), F.col("n_ref"), F.col("n_cur")
-            ).alias("p_value"),
-            "n_ref",
-            "n_cur",
-        )
-    # Tie pre-aggregation: collapse to one row per distinct value BEFORE
-    # any ordering work. Map-side partial aggregation shrinks the shuffle
-    # to the value's cardinality (continuous columns barely shrink; coded/
-    # discrete columns shrink orders of magnitude), and the downstream
-    # prefix sum sees exactly one row per value so tie semantics are
-    # automatic. No cache anywhere: at 100 TB an intermediate this size
-    # cannot be materialized — instead the boundary pass is a scan-only
-    # aggregation over the raw pool (frequency-weighted quantiles are
-    # balanced enough for bucketing), and the main plan consumes the
-    # grouped pool exactly once (the window and per-bucket-totals
-    # branches share one exchange).
-    raw = _pool(ref, cur, column)
-    pooled = raw.groupBy("v").agg(
-        F.sum("is_ref").alias("is_ref"), F.sum("is_cur").alias("is_cur")
+    n_ref, n_cur = F.col("n_ref"), F.col("n_cur")
+    gap = F.abs(F.col("cum_r") / n_ref - F.col("cum_c") / n_cur)
+    stat = cums.groupBy(*keys).agg(
+        F.max(F.when((n_ref > 0) & (n_cur > 0), gap)).alias("ks_stat"),
+        F.first("n_ref").alias("n_ref"),
+        F.first("n_cur").alias("n_cur"),
     )
-    bounds = range_boundaries(raw, "v")
-    cums = partitioned_prefix_sum(
-        pooled, "v", ["is_ref", "is_cur"], bounds=bounds, with_totals=True
-    )
-    stat = cums.agg(
-        F.max(
-            F.abs(
-                F.col("cum_is_ref") / F.col("tot_is_ref")
-                - F.col("cum_is_cur") / F.col("tot_is_cur")
-            )
-        ).alias("ks_stat"),
-        F.first("tot_is_ref").alias("n_ref"),
-        F.first("tot_is_cur").alias("n_cur"),
-    )
+    d = F.col("ks_stat")
     return stat.select(
+        *keys,
         "ks_stat",
-        ks_pvalue_expr(F.col("ks_stat"), F.col("n_ref"), F.col("n_cur")).alias(
-            "p_value"
-        ),
+        F.when(d.isNotNull(), ks_pvalue_expr(d, n_ref, n_cur)).alias("p_value"),
         "n_ref",
         "n_cur",
     )
-
-
-WINDOWED_MAX_DISTINCT = 250_000  # per-column single-reducer comfort zone
 
 
 def estimate_distinct_counts(
@@ -186,111 +169,59 @@ def value_drift(
     ref: DataFrame,
     cur: DataFrame,
     columns: list[str],
-    scalable: bool | str = False,
     distinct_estimates: dict[str, int] | None = None,
 ) -> DataFrame:
-    """Per-column KS drift for a set of columns in ONE pass.
+    """Per-column two-sample KS drift for a set of columns in one plan.
 
-    Returns ``(column string, ks_stat double, p_value double)`` with one
-    row per input column. Implementation: melt both sides to
-    ``(column, v, is_ref, is_cur)`` long format, tie pre-aggregate (one
-    row per distinct (column, value) — map-side combine does the heavy
-    lifting before any shuffle), then compute each column's ECDF pair:
+    Returns ``(column string, ks_stat double, p_value double, n_ref
+    long, n_cur long)``, one row per input column that has a non-null
+    value on either side.
 
-    - default: window partitioned by column — per-column work lands on
-      one reducer each; right when per-column distinct-value counts are
-      moderate (the monitoring-batch case: ≤ thousands of values).
-    - ``scalable=True``: grouped range-partitioned prefix sum
-      (functions/stats.py) — each column's ordering work spreads over
-      many buckets, so even a single continuous column with billions of
-      distinct values has no serial stage. Same results (both variants
-      are checked against the same DuckDB oracle).
-    - ``scalable="auto"``: estimate each column's distinct count with one
-      HLL pass and route it to the right branch — windowed below
-      ``WINDOWED_MAX_DISTINCT`` (skips the prefix-sum machinery's fixed
-      boundary pass: ~1 s that dominates monitoring-sized batches),
-      prefix-sum above it (no single-reducer cliff at scale). The two
-      branches produce identical rows, so routing never changes results.
-      Pass ``distinct_estimates`` (per-column counts the caller already
-      has — one ``estimate_distinct_counts`` pass, or catalog column
-      stats) and routing stays FULLY LAZY: no job at plan-construction
-      (columns missing from the dict conservatively take the prefix-sum
-      path). Without it, auto falls back to running the HLL estimate
-      eagerly — opt in where the caller executes immediately (the
-      monitoring pipeline passes estimates); fixed strategies are
-      always lazy.
+    ``distinct_estimates`` maps column → distinct-count estimate and
+    routes each column: at most ``WINDOWED_MAX_DISTINCT`` → the per-column
+    window; above it, or missing from the dict → the grouped prefix sum.
+    The windowed columns form one sub-plan and the rest another, unioned.
+    With estimates, plan construction runs no Spark job (the prefix
+    route's boundaries are part of the lazy plan); with ``None`` they
+    are measured first by one eager ``estimate_distinct_counts`` pass.
     """
     if not columns:
         raise ValueError("columns must be non-empty")
-    if scalable == "auto":
-        if distinct_estimates is not None:
-            est = {
-                c: distinct_estimates.get(c, WINDOWED_MAX_DISTINCT + 1)
-                for c in columns
-            }
-        else:
-            est = estimate_distinct_counts(ref, cur, columns)
-        small = [c for c in columns if est[c] <= WINDOWED_MAX_DISTINCT]
-        large = [c for c in columns if est[c] > WINDOWED_MAX_DISTINCT]
-        parts = []
-        if small:
-            parts.append(value_drift(ref, cur, small, scalable=False))
-        if large:
-            parts.append(value_drift(ref, cur, large, scalable=True))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionAll(p)
-        return out
-
-    def melt(df: DataFrame, is_ref: int) -> DataFrame:
-        long = df.select(
-            *[F.col(c).cast("double").alias(c) for c in columns]
-        ).unpivot([], columns, "column", "v")
-        return long.where(F.col("v").isNotNull()).select(
-            "column",
-            "v",
-            F.lit(is_ref).alias("is_ref"),
-            F.lit(1 - is_ref).alias("is_cur"),
-        )
-
-    pooled = melt(ref, 1).unionAll(melt(cur, 0))
-    aggd = pooled.groupBy("column", "v").agg(
-        F.sum("is_ref").alias("r"), F.sum("is_cur").alias("c")
+    est = (
+        distinct_estimates
+        if distinct_estimates is not None
+        else estimate_distinct_counts(ref, cur, columns)
     )
-    if scalable:
-        cums = grouped_prefix_sum(aggd, "column", "v", ["r", "c"]).select(
-            "column",
-            F.col("cum_r").alias("cum_ref"),
-            F.col("cum_c").alias("cum_cur"),
-            F.col("tot_r").alias("n_ref"),
-            F.col("tot_c").alias("n_cur"),
-        )
-    else:
-        w = Window.partitionBy("column").orderBy("v")  # 1 row/v → tie-safe
-        totals_w = Window.partitionBy("column")
-        cums = aggd.select(
-            "column",
-            F.sum("r").over(w).alias("cum_ref"),
-            F.sum("c").over(w).alias("cum_cur"),
-            F.sum("r").over(totals_w).alias("n_ref"),
-            F.sum("c").over(totals_w).alias("n_cur"),
-        )
-    stat = cums.groupBy("column").agg(
-        F.max(
-            F.abs(
-                F.col("cum_ref") / F.col("n_ref")
-                - F.col("cum_cur") / F.col("n_cur")
-            )
-        ).alias("ks_stat"),
-        F.first("n_ref").alias("n_ref"),
-        F.first("n_cur").alias("n_cur"),
-    )
-    return stat.select(
-        "column",
-        "ks_stat",
-        ks_pvalue_expr(F.col("ks_stat"), F.col("n_ref"), F.col("n_cur")).alias(
-            "p_value"
-        ),
+    windowed = [
+        c
+        for c in columns
+        if est.get(c, WINDOWED_MAX_DISTINCT + 1) <= WINDOWED_MAX_DISTINCT
+    ]
+    prefix = [c for c in columns if c not in windowed]
+    keys = ["column"]
+    parts = [
+        _ks(_tie_counts(_long(ref, cols), _long(cur, cols), keys), keys, p)
+        for cols, p in ((windowed, False), (prefix, True))
+        if cols
+    ]
+    return reduce(DataFrame.unionAll, parts)
+
+
+def ks_2samp(
+    ref: DataFrame,
+    cur: DataFrame,
+    column: str,
+    distinct_estimate: int | None = None,
+) -> DataFrame:
+    """Two-sample KS over one column: ``value_drift`` on ``[column]``
+    projected to one row ``(ks_stat, p_value, n_ref, n_cur)`` (no row
+    when neither side has a non-null value). ``distinct_estimate``
+    routes the column exactly as ``value_drift``'s estimates do; without
+    it, one HLL pass measures the column at plan construction.
+    """
+    est = None if distinct_estimate is None else {column: distinct_estimate}
+    return value_drift(ref, cur, [column], est).select(
+        "ks_stat", "p_value", "n_ref", "n_cur"
     )
 
 
@@ -303,11 +234,11 @@ def value_drift_by_window(
 ) -> DataFrame:
     """Drift TIMESERIES in one pass: per-column two-sample KS of every
     event-time window of ``cur`` against the (static) reference —
-    rows ``(window_start, column, ks_stat, p_value)``. This is the
-    dashboard's drift-over-time panel computed as ONE lazy plan over the
-    whole history, instead of re-running per-batch ``value_drift`` N
-    times (churn_prediction_pipeline.py:322 ran once per pipeline
-    invocation; Grafana then plotted the stored points —
+    rows ``(window_start, column, ks_stat, p_value, n_ref, n_cur)``.
+    This is the dashboard's drift-over-time panel computed as ONE lazy
+    plan over the whole history, instead of re-running per-batch
+    ``value_drift`` N times (churn_prediction_pipeline.py:322 ran once
+    per pipeline invocation; Grafana then plotted the stored points —
     churn-model-evaluation.json's drift timeseries panels).
 
     ``unit`` is a ``date_trunc`` unit ('day'/'week'/'month') so the
@@ -318,73 +249,17 @@ def value_drift_by_window(
     broadcast cross join (n_windows is the dashboard x-axis grain:
     small). The 100 TB side (``cur``) is read ONCE, melted, and tie
     pre-aggregated map-side; each (window, column) pair then forms its
-    own ECDF partition — strictly MORE parallelism than single-batch
-    drift, with no serial stage. A (window, column) group with no
-    current values yields a null ks_stat (0/0), never an error.
+    own window-route ECDF partition — strictly MORE parallelism than
+    single-batch drift, with no serial stage. A (window, column) group
+    with no current values yields a null ks_stat, never an error.
     """
     if not columns:
         raise ValueError("columns must be non-empty")
     wstart = F.date_trunc(unit, F.col(ts_col)).alias("window_start")
-
-    cur_long = (
-        cur.select(
-            wstart, *[F.col(c).cast("double").alias(c) for c in columns]
-        )
-        .unpivot(["window_start"], columns, "column", "v")
-        .where(F.col("v").isNotNull())
-        .select(
-            "window_start",
-            "column",
-            "v",
-            F.lit(0).alias("is_ref"),
-            F.lit(1).alias("is_cur"),
-        )
-    )
     windows = cur.select(wstart).distinct()
-    ref_long = (
-        ref.select(*[F.col(c).cast("double").alias(c) for c in columns])
-        .unpivot([], columns, "column", "v")
-        .where(F.col("v").isNotNull())
-        .crossJoin(F.broadcast(windows))
-        .select(
-            "window_start",
-            "column",
-            "v",
-            F.lit(1).alias("is_ref"),
-            F.lit(0).alias("is_cur"),
-        )
-    )
-    aggd = cur_long.unionByName(ref_long).groupBy(
-        "window_start", "column", "v"
-    ).agg(F.sum("is_ref").alias("r"), F.sum("is_cur").alias("c"))
-    w = Window.partitionBy("window_start", "column").orderBy("v")
-    tw = Window.partitionBy("window_start", "column")
-    cums = aggd.select(
-        "window_start",
-        "column",
-        F.sum("r").over(w).alias("cum_ref"),
-        F.sum("c").over(w).alias("cum_cur"),
-        F.sum("r").over(tw).alias("n_ref"),
-        F.sum("c").over(tw).alias("n_cur"),
-    )
-    stat = cums.groupBy("window_start", "column").agg(
-        F.max(
-            F.abs(
-                F.col("cum_ref") / F.col("n_ref")
-                - F.col("cum_cur") / F.col("n_cur")
-            )
-        ).alias("ks_stat"),
-        F.first("n_ref").alias("n_ref"),
-        F.first("n_cur").alias("n_cur"),
-    )
-    return stat.select(
-        "window_start",
-        "column",
-        "ks_stat",
-        ks_pvalue_expr(F.col("ks_stat"), F.col("n_ref"), F.col("n_cur")).alias(
-            "p_value"
-        ),
-    )
+    ref_long = _long(ref, columns).crossJoin(F.broadcast(windows))
+    keys = ["window_start", "column"]
+    return _ks(_tie_counts(ref_long, _long(cur, columns, wstart), keys), keys)
 
 
 def wasserstein(ref: DataFrame, cur: DataFrame, column: str) -> DataFrame:
@@ -395,7 +270,7 @@ def wasserstein(ref: DataFrame, cur: DataFrame, column: str) -> DataFrame:
 
     W1 = ∫ |ECDF_ref(v) − ECDF_cur(v)| dv, computed exactly over the
     pooled distinct values: Σ |Δcdf(v)| · (v_next − v). Scalable shape:
-    the same range-bucketed prefix sums as ``ks_2samp``; the only new
+    range-bucketed prefix sums (``partitioned_prefix_sum``); the only new
     piece is v_next — a within-bucket ``lead`` whose bucket-boundary
     null is filled from the next bucket's min(v) (a per-bucket frame of
     a few hundred rows, broadcast).
@@ -419,8 +294,8 @@ def _ecdf_steps(ref: DataFrame, cur: DataFrame, column: str) -> DataFrame:
     """Shared ECDF step frame for the integral drift statistics
     (wasserstein, energy): one row per pooled distinct value with both
     sides' inclusive prefix sums, totals, and the next distinct value
-    ``__v_next`` (null on the global max). Same range-bucketed
-    prefix-sum shape as ``ks_2samp`` — no single-reducer window."""
+    ``__v_next`` (null on the global max). Range-bucketed prefix sums
+    (``partitioned_prefix_sum``) — no single-reducer window."""
     raw = _pool(ref, cur, column)
     pooled = raw.groupBy("v").agg(
         F.sum("is_ref").alias("is_ref"), F.sum("is_cur").alias("is_cur")
@@ -895,7 +770,7 @@ def mannwhitney_u(
     """Mann–Whitney U rank test (Evidently's ``mannw`` stat test):
     → (u_stat, z, p_approx, n_ref, n_cur). Midranks over the pooled
     distinct values come from the same range-bucketed prefix sums as
-    ``ks_2samp`` — the tie group at value v spans ranks
+    ``wasserstein`` — the tie group at value v spans ranks
     (count below v, count at-or-below v], so its midrank is
     cum_before + (t+1)/2 and R_cur = Σ n_cur(v) · midrank(v) needs no
     per-row ranking. U = R_cur − n_cur(n_cur+1)/2; the p-value is the

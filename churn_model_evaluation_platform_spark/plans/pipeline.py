@@ -81,21 +81,17 @@ def monitoring_run(
     current = current.cache()
     scores = classification_scores(current, actual_col, predicted_col)
     per_label = per_label_scores(current, actual_col, predicted_col)
-    # scalable="auto": per-column cardinality routes each column to the
-    # windowed path (moderate cardinality — skips the prefix-sum
-    # boundary pass that dominates monitoring-sized batches) or the
-    # range-partitioned prefix sum (no single-reducer cliff when a
-    # column has millions of distinct values). Identical results. The
-    # estimate is ONE explicit map-side HLL pass here — `current` is
-    # cached above and this run executes immediately — passed down so
-    # value_drift's plan construction itself stays fully lazy.
+    # Per-column cardinality routes each column to the windowed path
+    # (moderate cardinality — skips the prefix-sum boundary pass that
+    # dominates monitoring-sized batches) or the grouped prefix sum (no
+    # single-reducer cliff when a column has millions of distinct
+    # values). Identical results. The estimate is ONE explicit map-side
+    # HLL pass here — `current` is cached above and this run executes
+    # immediately — passed down so value_drift's plan construction
+    # itself stays fully lazy.
     estimates = estimate_distinct_counts(reference, current, feature_cols)
     drift = value_drift(
-        reference,
-        current,
-        feature_cols,
-        scalable="auto",
-        distinct_estimates=estimates,
+        reference, current, feature_cols, distinct_estimates=estimates
     ).cache()
     metrics = (
         scores.unionAll(per_label)

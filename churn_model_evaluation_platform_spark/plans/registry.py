@@ -343,11 +343,13 @@ def q_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("value_drift_scalable", _VALUE_DRIFT_SQL)
 def q_value_drift_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Same semantics/oracle as value_drift, but the grouped
-    # range-partitioned prefix-sum path: no per-column serial reducer —
-    # the 100 TB variant, proven identical by the shared oracle.
+    # Same semantics/oracle as value_drift, but pinned to the grouped
+    # range-partitioned prefix-sum route (an empty estimates dict sends
+    # every column there): no per-column serial reducer — the 100 TB
+    # route, proven identical by the shared oracle.
     ref, cur = _drift_inputs(spark, sf_dir)
-    return value_drift(ref, cur, ["value", "user_id"], scalable=True).select(
+    drift = value_drift(ref, cur, ["value", "user_id"], distinct_estimates={})
+    return drift.select(
         F.col("column").alias("column_name"),
         "ks_stat",
         F.round(F.col("p_value"), 6).alias("p_value"),
@@ -364,8 +366,8 @@ FROM stat_v
 """,
 )
 def q_value_drift_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Single-column scalable variant (range-partitioned prefix sums, no
-    # single-partition window — functions/stats.py).
+    # Single-column KS: the one-column value_drift, routed by its
+    # measured distinct count.
     ref, cur = _drift_inputs(spark, sf_dir)
     return ks_2samp(ref, cur, "value").select(
         "ks_stat", F.col("n_ref").cast("bigint").alias("n_ref"),

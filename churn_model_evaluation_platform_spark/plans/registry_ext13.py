@@ -716,7 +716,7 @@ def q_multimodal_decode_jpeg_420(
 # hellinger + TVD (binned, one groupBy), energy distance (the exact
 # pooled-ECDF step integral — scipy.stats.energy_distance semantics,
 # never the O(n²) pairwise form), and the Mann–Whitney U rank test
-# (midranks from the same range-bucketed prefix sums as ks_2samp; U and
+# (midranks from the same range-bucketed prefix sums as wasserstein; U and
 # z are exact-arithmetic — midranks are half-integers — so the oracle
 # matches bit-for-bit before rounding).
 # ---------------------------------------------------------------------------

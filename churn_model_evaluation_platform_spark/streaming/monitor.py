@@ -20,7 +20,7 @@ from ..operators.metrics import append_metrics
 from ..operators.prep import prepare, validate_schema_containment
 from ..plans.pipeline import AlertSink, monitoring_run
 from ..sources.lifecycle import append_log
-from .file_stream import read_file_stream
+from .file_stream import read_file_stream, run_foreach_batch
 
 ScoreFn = Callable[[DataFrame], DataFrame]
 
@@ -71,12 +71,15 @@ def monitoring_stream(
         from pyspark.sql import functions as F
 
         batch = batch.persist()
+        # each file's metrics frame comes back cached by monitoring_run;
+        # release them once appended, or every drop leaves one cache
+        # entry behind for the life of the stream
+        metric_frames = []
         try:
             srcs = [
                 r["_source_file"]
                 for r in batch.select("_source_file").distinct().collect()
             ]
-            metric_frames = []
             for src in sorted(s or f"batch-{batch_id}" for s in srcs):
                 file_rows = batch.where(
                     F.col("_source_file").eqNullSafe(
@@ -106,6 +109,8 @@ def monitoring_stream(
                         batch_id=batch_id,
                     )
         finally:
+            for m in metric_frames:
+                m.unpersist()
             batch.unpersist()
 
     def _process_file(src: str, batch: DataFrame):
@@ -146,12 +151,7 @@ def monitoring_stream(
         return res.metrics
 
     stream = read_file_stream(spark, input_dir, schema)
-    writer = stream.writeStream.foreachBatch(run_one).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_foreach_batch(stream, run_one, checkpoint_dir, available_now)
 
 
 __all__ = ["monitoring_stream"]

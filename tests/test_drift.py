@@ -123,9 +123,16 @@ def test_assess_prediction_scores(spark):
     assert alert2 is False and failing2 == []
 
 
+def _route_rows(df):
+    return sorted(
+        (r["column"], round(r["ks_stat"], 9), round(r["p_value"], 9))
+        for r in df.collect()
+    )
+
+
 def test_value_drift_auto_routes_and_matches(spark):
-    # "auto" must produce exactly the rows of both fixed strategies
-    # regardless of which branch each column lands in.
+    # The window route ({c: 0}), the prefix-sum route ({}) and the
+    # measured routing (no estimates) must produce exactly the same rows.
     import random
 
     rng = random.Random(7)
@@ -138,17 +145,13 @@ def test_value_drift_auto_routes_and_matches(spark):
         ["cont", "disc"],
     )
     cols = ["cont", "disc"]
-    rows = lambda df: sorted(
-        (r["column"], round(r["ks_stat"], 9), round(r["p_value"], 9))
-        for r in df.collect()
-    )
-    expect = rows(value_drift(ref, cur, cols, scalable=False))
-    assert rows(value_drift(ref, cur, cols, scalable=True)) == expect
-    assert rows(value_drift(ref, cur, cols, scalable="auto")) == expect
+    expect = _route_rows(value_drift(ref, cur, cols, {c: 0 for c in cols}))
+    assert _route_rows(value_drift(ref, cur, cols, {})) == expect
+    assert _route_rows(value_drift(ref, cur, cols)) == expect
 
 
 def test_value_drift_auto_mixed_cardinality(spark, monkeypatch):
-    # Force the two columns into DIFFERENT branches by lowering the
+    # Force the two columns into DIFFERENT routes by lowering the
     # threshold between their cardinalities: results still identical.
     from churn_model_evaluation_platform_spark.operators import drift as dmod
 
@@ -159,21 +162,39 @@ def test_value_drift_auto_mixed_cardinality(spark, monkeypatch):
         "CAST(id * 2 AS DOUBLE) AS wide", "CAST(id % 3 AS DOUBLE) AS narrow"
     )
     monkeypatch.setattr(dmod, "WINDOWED_MAX_DISTINCT", 10)
-    auto = {
-        r["column"]: round(r["ks_stat"], 9)
-        for r in dmod.value_drift(ref, cur, ["wide", "narrow"], "auto").collect()
-    }
-    fixed = {
-        r["column"]: round(r["ks_stat"], 9)
-        for r in dmod.value_drift(ref, cur, ["wide", "narrow"], False).collect()
-    }
-    assert auto == fixed
+    cols = ["wide", "narrow"]
+    mixed = dmod.value_drift(ref, cur, cols)  # measured: wide > 10 > narrow
+    windowed = dmod.value_drift(ref, cur, cols, {c: 0 for c in cols})
+    assert _route_rows(mixed) == _route_rows(windowed)
+
+
+def test_value_drift_measures_and_routes_without_estimates(spark, monkeypatch):
+    # With no estimates passed, value_drift measures the distinct counts
+    # itself: a column above WINDOWED_MAX_DISTINCT must take the
+    # prefix-sum route, and still return the window route's rows.
+    from churn_model_evaluation_platform_spark.operators import drift as dmod
+
+    ref = spark.range(0, 500).selectExpr("CAST(id AS DOUBLE) AS wide")
+    cur = spark.range(0, 400).selectExpr("CAST(id * 2 AS DOUBLE) AS wide")
+    windowed = _route_rows(dmod.value_drift(ref, cur, ["wide"], {"wide": 0}))
+    calls = []
+    real = dmod.grouped_prefix_sum
+
+    def spy(*args, **kwargs):
+        calls.append(args[1])
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(dmod, "grouped_prefix_sum", spy)
+    monkeypatch.setattr(dmod, "WINDOWED_MAX_DISTINCT", 10)
+    measured = dmod.value_drift(ref, cur, ["wide"])
+    assert calls == ["column"]
+    assert _route_rows(measured) == windowed
 
 
 def test_value_drift_auto_with_estimates_is_lazy(spark):
-    # With precomputed estimates, auto routing must not run ANY Spark
-    # job at plan-construction time — and the routing must match what
-    # the eager estimate would have chosen.
+    # With precomputed estimates, routing must not run ANY Spark job at
+    # plan-construction time — on either route — and every route must
+    # produce the window route's rows.
     from churn_model_evaluation_platform_spark.operators import drift as dmod
 
     ref = spark.range(0, 300).selectExpr(
@@ -188,35 +209,60 @@ def test_value_drift_auto_with_estimates_is_lazy(spark):
         ref,
         cur,
         ["a", "b"],
-        scalable="auto",
         distinct_estimates={"a": dmod.WINDOWED_MAX_DISTINCT + 5, "b": 4},
     )
-    ks = dmod.ks_2samp(
-        ref, cur, "a", strategy="auto", distinct_estimate=7
-    )
+    ks = dmod.ks_2samp(ref, cur, "a", distinct_estimate=7)
+    # a column missing from the estimates dict takes the prefix-sum route
+    missing = dmod.value_drift(ref, cur, ["a"], distinct_estimates={})
     assert len(tracker.getJobIdsForGroup(None)) == before  # no job ran
-    rows = lambda df: sorted(
-        (r["column"], round(r["ks_stat"], 9)) for r in df.collect()
-    )
-    assert rows(lazy) == rows(dmod.value_drift(ref, cur, ["a", "b"], False))
-    eager = dmod.ks_2samp(ref, cur, "a", strategy="windowed").first()
+    windowed = dmod.value_drift(ref, cur, ["a", "b"], {"a": 0, "b": 0})
+    assert _route_rows(lazy) == _route_rows(windowed)
+    assert _route_rows(missing) == [
+        r for r in _route_rows(windowed) if r[0] == "a"
+    ]
+    eager = dmod.ks_2samp(ref, cur, "a").first()
     got = ks.first()
     assert round(got["ks_stat"], 9) == round(eager["ks_stat"], 9)
-    # column missing from the estimates dict takes the safe prefix path
-    missing = dmod.value_drift(
-        ref, cur, ["a"], scalable="auto", distinct_estimates={}
-    )
-    assert rows(missing) == rows(dmod.value_drift(ref, cur, ["a"], True))
 
 
 def test_ks_2samp_strategies_identical(spark):
+    # ks_2samp on the window route, the prefix-sum route and the
+    # measured route returns the same single row.
+    from churn_model_evaluation_platform_spark.operators.drift import (
+        WINDOWED_MAX_DISTINCT,
+    )
+
     ref = _df(spark, [1, 2, 2, 3, 5, 8])
     cur = _df(spark, [2, 3, 3, 4, 9])
     rows = {}
-    for s in ("prefix", "windowed", "auto"):
-        r = ks_2samp(ref, cur, "v", strategy=s).first()
-        rows[s] = (round(r["ks_stat"], 9), round(r["p_value"], 9), r["n_ref"], r["n_cur"])
-    assert rows["prefix"] == rows["windowed"] == rows["auto"]
+    for est in (0, WINDOWED_MAX_DISTINCT + 1, None):
+        got = ks_2samp(ref, cur, "v", distinct_estimate=est).collect()
+        assert len(got) == 1
+        r = got[0]
+        rows[est] = (
+            round(r["ks_stat"], 9), round(r["p_value"], 9), r["n_ref"], r["n_cur"]
+        )
+    assert rows[0] == rows[WINDOWED_MAX_DISTINCT + 1] == rows[None]
+
+
+def test_ks_2samp_one_side_empty_is_one_null_row(spark):
+    # A side with no non-null values has no ECDF: one row with null
+    # ks_stat/p_value and n = 0 on that side — on both routes.
+    from churn_model_evaluation_platform_spark.operators.drift import (
+        WINDOWED_MAX_DISTINCT,
+    )
+
+    ref = _df(spark, [1, 2, 2, 3])
+    cur = spark.createDataFrame([(None,), (None,)], "v double")
+    for a, b, n, est in (
+        (ref, cur, (4, 0), 0),  # window route, current side empty
+        (cur, ref, (0, 4), WINDOWED_MAX_DISTINCT + 1),  # prefix, ref empty
+    ):
+        got = ks_2samp(a, b, "v", distinct_estimate=est).collect()
+        assert len(got) == 1
+        r = got[0]
+        assert (r["ks_stat"], r["p_value"]) == (None, None)
+        assert (r["n_ref"], r["n_cur"]) == n
 
 
 def test_value_drift_by_window_matches_per_window_runs(spark):

@@ -118,3 +118,43 @@ def test_checkpoint_recovery_exactly_once(spark, tmp_path):
     q3.awaitTermination(300)
     metrics = spark.read.parquet(metrics_path)
     assert metrics.where(F.col("metric_name") == "f1score").count() == 2
+
+
+def test_drained_drops_leave_no_cached_data(spark, tmp_path):
+    """An always-on monitor must not accumulate cached frames: every
+    drop's metrics are released once appended, so draining N drops
+    leaves the cache exactly as it found it."""
+    rng = random.Random(11)
+    input_dir = tmp_path / "input"
+    input_dir.mkdir()
+    for i in range(3):
+        _write_good(input_dir / f"drop{i}.csv", rng)
+    reference = spark.createDataFrame(
+        [(rng.uniform(0, 10), rng.uniform(0, 10)) for _ in range(120)],
+        "a double, b double",
+    )
+    metrics_path = str(tmp_path / "metrics")
+    def persisted() -> set[int]:
+        # ids, not a count: other tests' RDDs may be cleaned meanwhile
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    before = persisted()
+
+    q = monitoring_stream(
+        spark,
+        str(input_dir),
+        SCHEMA,
+        reference,
+        COLS,
+        score_fn=lambda b: b.withColumn(
+            "churn_prediction", (F.col("a") + F.col("b") > 10).cast("int")
+        ),
+        metrics_path=metrics_path,
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        alert_sink=lambda s, m: None,
+    )
+    q.awaitTermination(300)
+
+    metrics = spark.read.parquet(metrics_path)
+    assert metrics.where(F.col("metric_name") == "f1score").count() == 3
+    assert persisted() - before == set()

@@ -73,8 +73,10 @@ def test_value_drift_scalable_equals_windowed(spark, xs, ys):
     a = spark.createDataFrame([(float(x), float(x) * 2) for x in xs], "u double, w double")
     b = spark.createDataFrame([(float(y), float(y) * 2) for y in ys], "u double, w double")
     cols = ["u", "w"]
-    win = {r["column"]: r for r in value_drift(a, b, cols).collect()}
-    sca = {r["column"]: r for r in value_drift(a, b, cols, scalable=True).collect()}
+    # {c: 0} pins the window route, {} the prefix-sum route
+    windowed = value_drift(a, b, cols, {c: 0 for c in cols})
+    win = {r["column"]: r for r in windowed.collect()}
+    sca = {r["column"]: r for r in value_drift(a, b, cols, {}).collect()}
     for c in cols:
         assert abs(win[c]["ks_stat"] - sca[c]["ks_stat"]) < 1e-12
         assert abs(win[c]["p_value"] - sca[c]["p_value"]) < 1e-12

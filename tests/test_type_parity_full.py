@@ -7,30 +7,17 @@ tests/test_oracle_types.py is the fast per-commit guard (binds oracles
 only); this tier constructs every registered Spark plan too and
 compares both engines' output schemas by hash-compatibility class.
 Runs as a subprocess so the audit gets the tool's own plain session
-instead of inheriting this suite's configured one (~110 s at sf0.001).
+instead of inheriting this suite's configured one. The subprocess takes
+minutes, so tests/conftest.py starts it when this test is collected and
+lets it run beside the rest of the suite; this test waits for it and
+checks its result.
 """
 
 from __future__ import annotations
 
-import os
-import subprocess
-import sys
 
-_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-
-def test_full_registry_type_parity():
-    proc = subprocess.run(
-        [
-            sys.executable,
-            os.path.join(_ROOT, "tools", "type_parity_audit.py"),
-            "/root/testdata/sf0.001",
-        ],
-        capture_output=True,
-        text=True,
-        timeout=1200,
-        cwd=_ROOT,
-    )
-    tail = "\n".join((proc.stdout + proc.stderr).splitlines()[-15:])
-    assert proc.returncode == 0, f"type-parity audit failed:\n{tail}"
-    assert "0 type-class mismatches, 0 construction errors" in proc.stdout
+def test_full_registry_type_parity(type_parity_audit):
+    returncode, output = type_parity_audit
+    tail = "\n".join(output.splitlines()[-15:])
+    assert returncode == 0, f"type-parity audit failed:\n{tail}"
+    assert "0 type-class mismatches, 0 construction errors" in output

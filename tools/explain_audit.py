@@ -34,7 +34,6 @@ from churn_model_evaluation_platform_spark.session import get_spark  # noqa: E40
 # cross join: a single-row aggregate or literal frame crossed into every
 # row (the build side is 1 row by construction).
 SINGLE_ROW_CROSS_OK = {
-    "value_drift_ks",
     "value_drift_wasserstein",
     "value_drift_psi",
     "value_drift_js",
@@ -80,7 +79,7 @@ SINGLE_ROW_CROSS_OK = {
     # broadcast pattern as their family (psi/wasserstein/auc_roc):
     "value_drift_hellinger_tvd",  # bin-totals cross + 1-row x 1-row
     "value_drift_energy",  # prefix-sum with_totals single-row cross
-    "value_drift_mannwhitney",  # same totals cross as ks_2samp
+    "value_drift_mannwhitney",  # prefix-sum with_totals single-row cross
     "auc_pr",  # single-row grand-totals broadcast (with_totals)
     "value_drift_hellinger_window",  # value_drift_by_window's pattern
     "stream_value_drift_hellinger",  # same panel finisher, drained counts
