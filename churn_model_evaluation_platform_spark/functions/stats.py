@@ -148,9 +148,14 @@ def grouped_prefix_sum(
         ).alias("__bounds")
     )
     v = F.col(order_col)
-    bucketed = df.join(F.broadcast(bounds), group_col).withColumn(
-        "__bucket", F.size(F.filter(F.col("__bounds"), lambda b: v > b))
-    ).drop("__bounds")
+    # explicit, so an input already partitioned by the group alone still
+    # spreads each group over its buckets
+    bucketed = (
+        df.join(F.broadcast(bounds), group_col)
+        .withColumn("__bucket", F.size(F.filter(F.col("__bounds"), lambda b: v > b)))
+        .drop("__bounds")
+        .repartition(group_col, "__bucket")
+    )
     w = Window.partitionBy(group_col, "__bucket").orderBy(order_col)
     local = bucketed.select(
         "*", *[F.sum(c).over(w).alias(f"cum_{c}") for c in sum_cols]

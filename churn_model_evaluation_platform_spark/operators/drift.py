@@ -10,20 +10,23 @@ churn-model-evaluation.json:1170). We implement KS-with-p-value natively:
 
 as a pure DataFrame aggregation: melt both samples to long
 ``(keys…, v)`` rows, tie pre-aggregate to one row per distinct value
-with the reference/current counts, take per-key running counts ordered
-by value, and finish with the max absolute normalized difference and
-its asymptotic p-value. ``value_drift``, ``ks_2samp`` and
+with the reference/current counts (``tie_counts``), take per-key running
+counts ordered by value, and finish with the max absolute normalized
+difference and its asymptotic p-value. ``value_drift``, ``ks_2samp`` and
 ``value_drift_by_window`` all run that one kernel (``_ks``).
 
 The running counts take one of two routes, picked by one rule: a column
-whose distinct-count estimate is at most ``WINDOWED_MAX_DISTINCT`` takes
-the per-key window (one reducer per column; no boundary pass, which
+whose distinct count is at most ``WINDOWED_MAX_DISTINCT`` takes the
+per-key window (one reducer per column; no boundary pass, which
 dominates monitoring-sized batches); any other column — including one
-without an estimate — takes ``functions/stats.grouped_prefix_sum``
-(each column's value range split over balanced buckets, so no serial
-stage at any cardinality). The estimate is an input measurement (one
-``estimate_distinct_counts`` HLL pass, or catalog column stats), never a
-caller-chosen strategy, and both routes produce identical rows.
+without a count — takes ``functions/stats.grouped_prefix_sum`` (each
+column's value range split over balanced buckets, so no serial stage at
+any cardinality). The count is an input measurement, never a
+caller-chosen strategy: ``estimate_distinct_counts`` reads it exactly
+off the tie counts, which hold one row per distinct value, so a caller
+that caches the tie counts (``plans/pipeline.monitoring_run``) measures
+every column and runs both routes without another pass over the batch.
+Both routes produce identical rows.
 
 p-values use the asymptotic Kolmogorov series (functions/stats.py) since
 scipy is deliberately not a dependency. Unit tests pin values against
@@ -35,6 +38,7 @@ keep the stat pluggable.
 
 from __future__ import annotations
 
+from collections.abc import Iterable
 from functools import reduce
 
 from pyspark.sql import Column, DataFrame, Window
@@ -46,6 +50,7 @@ from ..functions.stats import (
     partitioned_prefix_sum,
     range_boundaries,
 )
+from .metrics import metrics_frame
 
 P_VALUE_DRIFT_THRESHOLD = 0.05  # churn_prediction_pipeline.py:419
 DATASET_DRIFT_SHARE = 0.5  # churn_prediction_pipeline.py:415
@@ -147,22 +152,45 @@ def _ks(counts: DataFrame, keys: list[str], prefix: bool = False) -> DataFrame:
     )
 
 
-def estimate_distinct_counts(
-    ref: DataFrame, cur: DataFrame, columns: list[str]
-) -> dict[str, int]:
-    """Approximate per-column distinct counts over the pooled sample in
-    ONE map-side HLL pass (no shuffle of data, one-row result)."""
-
-    def proj(df: DataFrame) -> DataFrame:
-        return df.select(*[F.col(c).cast("double").alias(c) for c in columns])
-
-    row = (
-        proj(ref)
-        .unionAll(proj(cur))
-        .agg(*[F.approx_count_distinct(c).alias(c) for c in columns])
-        .first()
+def tie_counts(ref: DataFrame, cur: DataFrame, columns: list[str]) -> DataFrame:
+    """Tie counts ``(column, v, r, c)`` of every column in one
+    aggregation: one row per distinct non-null value, with its reference
+    and current counts. Partitioned by column, so per-column work over
+    it (distinct counts, the window route) shuffles nothing more."""
+    keys = ["column"]
+    return _tie_counts(_long(ref, columns), _long(cur, columns), keys).repartition(
+        *keys
     )
-    return {c: int(row[c]) for c in columns}
+
+
+def estimate_distinct_counts(counts: DataFrame, columns: list[str]) -> dict[str, int]:
+    """Each column's exact pooled distinct count, read off ``tie_counts``
+    output (one row per distinct value) in one small aggregation. A
+    column with no non-null value on either side counts 0."""
+    found = dict(counts.groupBy("column").count().collect())
+    return {c: int(found.get(c, 0)) for c in columns}
+
+
+def value_drift_from_counts(
+    counts: DataFrame, columns: list[str], distinct_estimates: dict[str, int]
+) -> DataFrame:
+    """``value_drift`` over ``tie_counts`` output, with no Spark job.
+    ``distinct_estimates`` maps column → distinct count and routes each
+    column: at most ``WINDOWED_MAX_DISTINCT`` → the per-column window;
+    above it, or missing from the dict → the grouped prefix sum."""
+    windowed = [
+        c
+        for c in columns
+        if distinct_estimates.get(c, WINDOWED_MAX_DISTINCT + 1)
+        <= WINDOWED_MAX_DISTINCT
+    ]
+    prefix = [c for c in columns if c not in windowed]
+    parts = [
+        _ks(counts.where(F.col("column").isin(cols)), ["column"], p)
+        for cols, p in ((windowed, False), (prefix, True))
+        if cols
+    ]
+    return reduce(DataFrame.unionAll, parts)
 
 
 def value_drift(
@@ -177,34 +205,20 @@ def value_drift(
     long, n_cur long)``, one row per input column that has a non-null
     value on either side.
 
-    ``distinct_estimates`` maps column → distinct-count estimate and
-    routes each column: at most ``WINDOWED_MAX_DISTINCT`` → the per-column
-    window; above it, or missing from the dict → the grouped prefix sum.
-    The windowed columns form one sub-plan and the rest another, unioned.
-    With estimates, plan construction runs no Spark job (the prefix
-    route's boundaries are part of the lazy plan); with ``None`` they
-    are measured first by one eager ``estimate_distinct_counts`` pass.
+    Columns are routed as in ``value_drift_from_counts``. With
+    ``distinct_estimates``, plan construction runs no Spark job; with
+    ``None`` the exact counts are measured first by one eager
+    ``estimate_distinct_counts`` job over the tie counts.
     """
     if not columns:
         raise ValueError("columns must be non-empty")
+    counts = tie_counts(ref, cur, columns)
     est = (
         distinct_estimates
         if distinct_estimates is not None
-        else estimate_distinct_counts(ref, cur, columns)
+        else estimate_distinct_counts(counts, columns)
     )
-    windowed = [
-        c
-        for c in columns
-        if est.get(c, WINDOWED_MAX_DISTINCT + 1) <= WINDOWED_MAX_DISTINCT
-    ]
-    prefix = [c for c in columns if c not in windowed]
-    keys = ["column"]
-    parts = [
-        _ks(_tie_counts(_long(ref, cols), _long(cur, cols), keys), keys, p)
-        for cols, p in ((windowed, False), (prefix, True))
-        if cols
-    ]
-    return reduce(DataFrame.unionAll, parts)
+    return value_drift_from_counts(counts, columns, est)
 
 
 def ks_2samp(
@@ -217,7 +231,7 @@ def ks_2samp(
     projected to one row ``(ks_stat, p_value, n_ref, n_cur)`` (no row
     when neither side has a non-null value). ``distinct_estimate``
     routes the column exactly as ``value_drift``'s estimates do; without
-    it, one HLL pass measures the column at plan construction.
+    it, one job measures the column's distinct count at plan construction.
     """
     est = None if distinct_estimate is None else {column: distinct_estimate}
     return value_drift(ref, cur, [column], est).select(
@@ -917,39 +931,31 @@ def drift_statistic(
     )
 
 
-def value_drift_metrics(
-    ref: DataFrame, cur: DataFrame, columns: list[str]
-) -> DataFrame:
-    """Drift result as long metrics rows ``(metric_name, value)`` named
-    ``valuedrift_<column>`` — the simplified-name contract the dashboard
-    SQL depends on (churn_prediction_pipeline.py:533-553).
-    """
-    return value_drift(ref, cur, columns).select(
-        F.concat(F.lit("valuedrift_"), F.col("column")).alias("metric_name"),
-        F.col("p_value").alias("value"),
-    )
+def drifted_columns_count_rows(
+    p_values: list[float | None], p_threshold: float = P_VALUE_DRIFT_THRESHOLD
+) -> list[tuple[str, float | None]]:
+    """The two dataset-level metrics the reference consumes
+    (churn_prediction_pipeline.py:412-416), ``driftedcolumnscount[count]``
+    and ``driftedcolumnscount[share]``, over per-column p-values. As in
+    SQL, a null p-value is never drifted but counts toward the share's
+    denominator, and with no non-null p-value both values are null."""
+    flags = [p < p_threshold for p in p_values if p is not None]
+    count = float(sum(flags)) if flags else None
+    share = None if count is None else count / len(p_values)
+    return [
+        ("driftedcolumnscount[count]", count),
+        ("driftedcolumnscount[share]", share),
+    ]
 
 
 def drifted_columns_count(
     drift: DataFrame, p_threshold: float = P_VALUE_DRIFT_THRESHOLD
 ) -> DataFrame:
-    """Aggregate per-column drift into the two dataset-level metrics the
-    reference consumes (churn_prediction_pipeline.py:412-416):
-    ``driftedcolumnscount[count]`` and ``driftedcolumnscount[share]``.
-
-    Input: the output of ``value_drift`` (one row per column).
-    """
-    agg = drift.agg(
-        F.sum((F.col("p_value") < F.lit(p_threshold)).cast("int"))
-        .cast("double")
-        .alias("count"),
-        F.count(F.lit(1)).cast("double").alias("n_cols"),
-    )
-    wide = agg.select(
-        F.col("count").alias("driftedcolumnscount[count]"),
-        (F.col("count") / F.col("n_cols")).alias("driftedcolumnscount[share]"),
-    )
-    return wide.unpivot([], wide.columns, "metric_name", "value")
+    """``drifted_columns_count_rows`` over the output of ``value_drift``
+    (one row per column, collected), as ``(metric_name, value)`` rows."""
+    p_values = [r[0] for r in drift.select("p_value").collect()]
+    rows = drifted_columns_count_rows(p_values, p_threshold)
+    return metrics_frame(drift.sparkSession, rows)
 
 
 def assess_data_drift_df(
@@ -995,48 +1001,39 @@ def assess_prediction_scores_df(
 
 
 def assess_data_drift(
-    metrics: DataFrame, share_threshold: float = DATASET_DRIFT_SHARE
+    metrics: Iterable[tuple[str, float | None]],
+    share_threshold: float = DATASET_DRIFT_SHARE,
 ) -> tuple[bool, int, list[str]]:
-    """Predicate over a metrics DataFrame: (dataset drifted?, n drifted
-    columns, drifted column names) — churn_prediction_pipeline.py:395-431.
-    The metrics frame is tiny (one row per metric); collect is intended.
+    """Predicate over collected ``(metric_name, value)`` rows: (dataset
+    drifted?, n drifted columns, drifted column names) —
+    churn_prediction_pipeline.py:395-431. A null value never counts as
+    drifted, as in SQL.
     """
-    rows = metrics.where(
-        F.col("metric_name").startswith("driftedcolumnscount")
-        | (
-            F.col("metric_name").startswith("valuedrift_")
-            & (F.col("value") < P_VALUE_DRIFT_THRESHOLD)
-        )
-    ).collect()
-    share = next(
-        (r["value"] for r in rows if r["metric_name"] == "driftedcolumnscount[share]"),
-        0.0,
-    )
-    count = next(
-        (r["value"] for r in rows if r["metric_name"] == "driftedcolumnscount[count]"),
-        0.0,
-    )
+    values = dict(metrics)
+    share = values.get("driftedcolumnscount[share]") or 0.0
+    count = values.get("driftedcolumnscount[count]") or 0.0
     drifted_cols = sorted(
-        r["metric_name"].removeprefix("valuedrift_")
-        for r in rows
-        if r["metric_name"].startswith("valuedrift_")
+        name.removeprefix("valuedrift_")
+        for name, v in values.items()
+        if name.startswith("valuedrift_")
+        and v is not None
+        and v < P_VALUE_DRIFT_THRESHOLD
     )
     return bool(share > share_threshold), int(count), drifted_cols
 
 
 def assess_prediction_scores(
-    metrics: DataFrame, score_threshold: float = 0.70
+    metrics: Iterable[tuple[str, float | None]], score_threshold: float = 0.70
 ) -> tuple[bool, list[tuple[str, float]]]:
-    """Predicate: any of f1score/precision/recall/accuracy below threshold?
+    """Predicate over collected ``(metric_name, value)`` rows: any of
+    f1score/precision/recall/accuracy below threshold?
     (churn_prediction_pipeline.py:434-485; default 0.70 per :435,:879).
     """
-    rows = (
-        metrics.where(
-            F.col("metric_name").isin("f1score", "precision", "recall", "accuracy")
-            & (F.col("value") < F.lit(score_threshold))
-        )
-        .orderBy("metric_name")
-        .collect()
+    failing = sorted(
+        (name, float(v))
+        for name, v in metrics
+        if name in ("f1score", "precision", "recall", "accuracy")
+        and v is not None
+        and v < score_threshold
     )
-    failing = [(r["metric_name"], float(r["value"])) for r in rows]
     return bool(failing), failing

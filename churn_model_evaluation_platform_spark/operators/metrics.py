@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import re
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -73,6 +74,15 @@ def simplify_metric_name(metric_id: str) -> str:
     return f"{base}_{col.group(1).lower()}" if col else base
 
 
+def metrics_frame(spark: SparkSession, rows: list[tuple[str, float | None]]) -> DataFrame:
+    """``(metric_name, value)`` rows held by the driver as a DataFrame,
+    built from an Arrow table so no Python worker starts."""
+    names, values = zip(*rows)
+    columns = [pa.array(names, pa.string()), pa.array(values, pa.float64())]
+    table = pa.table(columns, names=["metric_name", "value"])
+    return spark.createDataFrame(table)
+
+
 def with_created_at(df: DataFrame, ts: Column | None = None) -> DataFrame:
     """Stamp the append time (churn_prediction_pipeline.py:509,521 uses
     ``datetime.utcnow()``). Pass a literal for deterministic tests.
@@ -91,7 +101,13 @@ def append_metrics(df: DataFrame, path: str, partition_by_date: bool = False) ->
     partition column derived from ``created_at`` so the dashboard's
     time-windowed queries prune to recent partitions instead of scanning
     the append-forever history.
+
+    A metrics frame is small (one row per metric of a run), so it is
+    written as one file per date partition: each dashboard scan pays for
+    every file. ``repartition`` rather than ``coalesce``: the frame's own
+    partitions still compute in parallel, then one shuffle of a few rows.
     """
+    df = df.repartition(1)
     if partition_by_date:
         df.withColumn(
             "metric_date", F.to_date("created_at")

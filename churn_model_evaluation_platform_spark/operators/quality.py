@@ -14,7 +14,7 @@ that single row; the long (metric_name, value) shape falls out of a stack.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..schema import TARGET_COLUMN, TARGET_PREDICTION_COLUMN
@@ -53,6 +53,32 @@ def _scores_from_cm(tp, fp, fn, tn, n):
     return accuracy, precision, recall, f1
 
 
+def _overall_columns() -> list[Column]:
+    """The four overall scores over a ``confusion_matrix`` row."""
+    tp, fp, fn, tn, n = (F.col(c) for c in ("tp", "fp", "fn", "tn", "n"))
+    names = ("accuracy", "precision", "recall", "f1score")
+    return [s.alias(name) for s, name in zip(_scores_from_cm(tp, fp, fn, tn, n), names)]
+
+
+def _per_label_columns(labels: tuple[int, int]) -> list[Column]:
+    """Per-label precision/recall/f1 over a ``confusion_matrix`` row with
+    ``labels[1]`` positive: treating the other label as positive just
+    transposes the matrix (tp<->tn, fp<->fn)."""
+    neg, pos = labels
+    tp, fp, fn, tn, n = (F.col(c) for c in ("tp", "fp", "fn", "tn", "n"))
+    cols = []
+    for label, cells in ((pos, (tp, fp, fn, tn)), (neg, (tn, fn, fp, tp))):
+        _, *prf = _scores_from_cm(*cells, n)
+        names = ("precision", "recall", "f1")
+        cols += [s.alias(f"{name}bylabel_{label}") for s, name in zip(prf, names)]
+    return cols
+
+
+def _long(cm: DataFrame, columns: list[Column]) -> DataFrame:
+    wide = cm.select(*columns)
+    return wide.unpivot([], wide.columns, "metric_name", "value")
+
+
 def classification_scores(
     df: DataFrame,
     actual_col: str = TARGET_COLUMN,
@@ -64,15 +90,20 @@ def classification_scores(
     reference's dashboard consumes — churn_prediction_pipeline.py:533-553).
     """
     cm = confusion_matrix(df, actual_col, predicted_col, positive)
-    tp, fp, fn, tn, n = (F.col(c) for c in ("tp", "fp", "fn", "tn", "n"))
-    accuracy, precision, recall, f1 = _scores_from_cm(tp, fp, fn, tn, n)
-    wide = cm.select(
-        accuracy.alias("accuracy"),
-        precision.alias("precision"),
-        recall.alias("recall"),
-        f1.alias("f1score"),
-    )
-    return wide.unpivot([], wide.columns, "metric_name", "value")
+    return _long(cm, _overall_columns())
+
+
+def quality_scores(
+    df: DataFrame,
+    actual_col: str = TARGET_COLUMN,
+    predicted_col: str = TARGET_PREDICTION_COLUMN,
+) -> DataFrame:
+    """The rows of ``classification_scores`` then ``per_label_scores``
+    (labels 0/1) from ONE confusion-matrix aggregation. A union of the two
+    frames aggregates the batch twice: when both read one cached frame,
+    Spark cannot reuse one aggregation for the other."""
+    cm = confusion_matrix(df, actual_col, predicted_col)
+    return _long(cm, _overall_columns() + _per_label_columns((0, 1)))
 
 
 def classification_scores_by_segment(
@@ -122,23 +153,8 @@ def per_label_scores(
     """Binary per-label scores flattened to ``f1bylabel_<label>`` etc.
     (name shape per churn_prediction_pipeline.py:519,541).
 
-    Derived from the SAME single confusion-matrix row: treating label 0 as
-    positive just transposes the matrix (tp<->tn, fp<->fn), so no second
-    pass over the data is needed.
+    Derived from the SAME single confusion-matrix row, so no second pass
+    over the data is needed.
     """
-    neg, pos = labels
-    cm = confusion_matrix(df, actual_col, predicted_col, positive=pos)
-    tp, fp, fn, tn, n = (F.col(c) for c in ("tp", "fp", "fn", "tn", "n"))
-    sel = []
-    for label, (ltp, lfp, lfn, ltn) in (
-        (pos, (tp, fp, fn, tn)),
-        (neg, (tn, fn, fp, tp)),
-    ):
-        _, precision, recall, f1 = _scores_from_cm(ltp, lfp, lfn, ltn, n)
-        sel += [
-            precision.alias(f"precisionbylabel_{label}"),
-            recall.alias(f"recallbylabel_{label}"),
-            f1.alias(f"f1bylabel_{label}"),
-        ]
-    wide = cm.select(*sel)
-    return wide.unpivot([], wide.columns, "metric_name", "value")
+    cm = confusion_matrix(df, actual_col, predicted_col, positive=labels[1])
+    return _long(cm, _per_label_columns(labels))

@@ -11,14 +11,17 @@ continues — one bad drop never stalls the stream.
 
 from __future__ import annotations
 
+from functools import reduce
 from typing import Callable
+from urllib.parse import unquote, urlsplit
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from ..operators.metrics import append_metrics
+from ..operators.metrics import append_metrics, append_metrics_jdbc
 from ..operators.prep import prepare, validate_schema_containment
-from ..plans.pipeline import AlertSink, monitoring_run
+from ..plans.pipeline import AlertSink, job_layer, monitoring_run
 from ..sources.lifecycle import append_log
 from .file_stream import read_file_stream, run_foreach_batch
 
@@ -62,93 +65,76 @@ def monitoring_stream(
     expected = expected_columns or feature_cols
 
     def run_one(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
         # One micro-batch may carry several source files (trigger rate is
         # a tuning knob, not a semantic contract) — process each file
         # under its OWN validation verdict, like the reference's
-        # one-run-per-file state machine.
-        from pyspark.sql import functions as F
-
-        batch = batch.persist()
-        # each file's metrics frame comes back cached by monitoring_run;
-        # release them once appended, or every drop leaves one cache
-        # entry behind for the life of the stream
-        metric_frames = []
-        try:
+        # one-run-per-file state machine. An empty batch has no files.
+        with job_layer(spark, "validate"):
             srcs = [
                 r["_source_file"]
                 for r in batch.select("_source_file").distinct().collect()
             ]
-            for src in sorted(s or f"batch-{batch_id}" for s in srcs):
-                file_rows = batch.where(
-                    F.col("_source_file").eqNullSafe(
-                        None if src == f"batch-{batch_id}" else src
-                    )
-                )
-                m = _process_file(src, file_rows)
-                if m is not None:
-                    metric_frames.append(m)
-            if metric_frames:
-                from functools import reduce
-
-                all_metrics = reduce(lambda a, b: a.unionAll(b), metric_frames)
-                append_metrics(
+        metric_frames = []
+        for src in sorted(srcs):
+            m = _process_file(src, batch.where(F.col("_source_file") == src))
+            if m is not None:
+                metric_frames.append(m)
+        if not metric_frames:
+            return
+        all_metrics = reduce(DataFrame.unionAll, metric_frames)
+        with job_layer(spark, "append"):
+            append_metrics(
+                all_metrics, metrics_path, partition_by_date=partition_metrics_by_date
+            )
+            if metrics_jdbc_url is not None:
+                append_metrics_jdbc(
                     all_metrics,
-                    metrics_path,
-                    partition_by_date=partition_metrics_by_date,
+                    metrics_jdbc_url,
+                    metrics_jdbc_table,
+                    metrics_jdbc_properties,
+                    batch_id=batch_id,
                 )
-                if metrics_jdbc_url is not None:
-                    from ..operators.metrics import append_metrics_jdbc
 
-                    append_metrics_jdbc(
-                        all_metrics,
-                        metrics_jdbc_url,
-                        metrics_jdbc_table,
-                        metrics_jdbc_properties,
-                        batch_id=batch_id,
-                    )
-        finally:
-            for m in metric_frames:
-                m.unpersist()
-            batch.unpersist()
-
-    def _process_file(src: str, batch: DataFrame):
+    def _process_file(src: str, batch: DataFrame) -> DataFrame | None:
         data = batch.drop("_source_file")
         # Validate the FILE's own header, not the stream schema: a CSV
         # read through a declared schema always has the declared columns,
         # so containment must be checked against what the file really
         # carries (reference reads + cleans the actual header,
-        # churn_prediction_pipeline.py:142-159).
+        # churn_prediction_pipeline.py:142-159). The file source names
+        # files by percent-encoded URI; a local file is read directly.
+        path = unquote(urlsplit(src).path) if src.startswith("file:") else src
         header_cols = None
-        if src.startswith(("file:", "/")) and src.endswith(".csv"):
-            first = spark.read.text(src).first()
-            if first is not None:
-                header_cols = [c.strip() for c in first["value"].split(",")]
+        if path.startswith("/") and path.endswith(".csv"):
+            with open(path, encoding="utf-8", errors="replace") as f:
+                header_cols = [c.strip() for c in f.readline().split(",")]
         v = validate_schema_containment(
             header_cols if header_cols is not None else data, expected, src
         )
         if not v.ok:
-            if errored_dir is not None:
-                data.write.mode("append").parquet(errored_dir)
-                append_log(
-                    spark,
-                    f"{errored_dir}/_logs/{src.rsplit('/', 1)[-1]}.log",
-                    v.error or "validation failed",
-                )
+            with job_layer(spark, "validate"):
+                if errored_dir is not None:
+                    data.write.mode("append").parquet(errored_dir)
+                    append_log(
+                        spark,
+                        f"{errored_dir}/_logs/{path.rsplit('/', 1)[-1]}.log",
+                        v.error or "validation failed",
+                    )
             if alert_sink is not None:
                 alert_sink("Invalid input file", v.error or src)
             return None
-        scored = score_fn(prepare(data, feature_cols))
-        if predictions_path is not None:
-            scored.write.mode("append").parquet(predictions_path)
-        res = monitoring_run(
-            scored,
-            reference,
-            feature_cols,
-            alert_sink=alert_sink,
-        )
-        return res.metrics
+        # cached so the predictions write fills it and monitoring_run
+        # reads it: the model scores each row once
+        scored = score_fn(prepare(data, feature_cols)).cache()
+        try:
+            if predictions_path is not None:
+                with job_layer(spark, "score+write"):
+                    scored.write.mode("append").parquet(predictions_path)
+            return monitoring_run(
+                scored, reference, feature_cols, alert_sink=alert_sink
+            ).metrics
+        finally:
+            scored.unpersist()
 
     stream = read_file_stream(spark, input_dir, schema)
     return run_foreach_batch(stream, run_one, checkpoint_dir, available_now)

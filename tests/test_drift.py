@@ -105,7 +105,7 @@ def test_drifted_columns_count_and_assess(spark):
         F.concat(F.lit("valuedrift_"), F.col("column")).alias("metric_name"),
         F.col("p_value").alias("value"),
     ).unionAll(drifted_columns_count(drift))
-    drifted, n, cols = assess_data_drift(metrics)
+    drifted, n, cols = assess_data_drift(metrics.collect())
     assert drifted is True  # share 2/3 > 0.5
     assert n == 2
     assert cols == ["a", "b"]
@@ -116,10 +116,10 @@ def test_assess_prediction_scores(spark):
         [("f1score", 0.65), ("precision", 0.9), ("recall", 0.72), ("accuracy", 0.95)],
         ["metric_name", "value"],
     )
-    alert, failing = assess_prediction_scores(m, 0.70)
+    alert, failing = assess_prediction_scores(m.collect(), 0.70)
     assert alert is True
     assert failing == [("f1score", 0.65)]
-    alert2, failing2 = assess_prediction_scores(m, 0.60)
+    alert2, failing2 = assess_prediction_scores(m.collect(), 0.60)
     assert alert2 is False and failing2 == []
 
 

@@ -158,3 +158,121 @@ def test_drained_drops_leave_no_cached_data(spark, tmp_path):
     metrics = spark.read.parquet(metrics_path)
     assert metrics.where(F.col("metric_name") == "f1score").count() == 3
     assert persisted() - before == set()
+
+
+def _score(b):
+    return b.withColumn("churn_prediction", (F.col("a") + F.col("b") > 10).cast("int"))
+
+
+def _reference(spark, rng):
+    return spark.createDataFrame(
+        [(rng.uniform(0, 10), rng.uniform(0, 10)) for _ in range(120)],
+        "a double, b double",
+    )
+
+
+def test_drop_names_with_space_and_percent(spark, tmp_path):
+    """The file source names each file by its percent-encoded URI: a drop
+    named with a space or ``%`` still has its header read and its metrics
+    landed, and a malformed one is routed with its audit line under its
+    own (decoded) name — neither stops the stream."""
+    rng = random.Random(5)
+    input_dir = tmp_path / "input"
+    input_dir.mkdir()
+    _write_good(input_dir / "drop 1%.csv", rng)
+    (input_dir / "bad x.csv").write_text("a,churn\n1.0,0\n")
+    alerts: list[str] = []
+    metrics_path = str(tmp_path / "metrics")
+    errored = str(tmp_path / "errored")
+
+    q = monitoring_stream(
+        spark,
+        str(input_dir),
+        SCHEMA,
+        _reference(spark, rng),
+        COLS,
+        score_fn=_score,
+        metrics_path=metrics_path,
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        errored_dir=errored,
+        alert_sink=lambda s, m: alerts.append(s),
+    )
+    q.awaitTermination(300)
+
+    assert q.exception() is None
+    metrics = spark.read.parquet(metrics_path)
+    assert metrics.where(F.col("metric_name") == "f1score").count() == 1
+    log = read_log(spark, f"{errored}/_logs/bad x.csv.log")
+    assert len(log) == 1 and "expected structure" in log[0].lower()
+    assert alerts.count("Invalid input file") == 1
+
+
+def test_model_scores_each_row_once(spark, tmp_path):
+    """The scored frame is cached before the predictions write, so the
+    write fills the cache and monitoring reads it: the model's UDF runs
+    once per row of the drop."""
+    rng = random.Random(17)
+    input_dir = tmp_path / "input"
+    input_dir.mkdir()
+    n = 150
+    _write_good(input_dir / "drop.csv", rng, n)
+    calls = spark.sparkContext.accumulator(0)
+
+    @F.udf("int")
+    def predict(a, b):
+        calls.add(1)
+        return int(a + b > 10)
+
+    q = monitoring_stream(
+        spark,
+        str(input_dir),
+        SCHEMA,
+        _reference(spark, rng),
+        COLS,
+        score_fn=lambda b: b.withColumn("churn_prediction", predict("a", "b")),
+        metrics_path=str(tmp_path / "metrics"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        predictions_path=str(tmp_path / "predictions"),
+        alert_sink=lambda s, m: None,
+    )
+    q.awaitTermination(300)
+
+    assert spark.read.parquet(str(tmp_path / "predictions")).count() == n
+    assert calls.value == n
+
+
+# Spark jobs one valid drop may run after a warm-up drop: validate 2 (find
+# the batch's files), score+write 1, drift 4 (tie counts and their
+# distinct counts), quality+drift 2 (the metrics collect), append 2 (one
+# file per append).
+WARM_DROP_JOB_BUDGET = 11
+
+
+def test_one_warmed_drop_job_budget(spark, tmp_path):
+    """Guard the one-pass shape: count the Spark jobs one valid drop runs
+    through ``monitoring_stream`` once a first drop has warmed the path."""
+    rng = random.Random(23)
+    input_dir = tmp_path / "input"
+    input_dir.mkdir()
+    kwargs = dict(
+        schema=SCHEMA,
+        reference=_reference(spark, rng),
+        feature_cols=COLS,
+        score_fn=_score,
+        metrics_path=str(tmp_path / "metrics"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        predictions_path=str(tmp_path / "predictions"),
+        alert_sink=lambda s, m: None,
+    )
+    _write_good(input_dir / "warmup.csv", rng)
+    monitoring_stream(spark, str(input_dir), **kwargs).awaitTermination(300)
+
+    _write_good(input_dir / "drop.csv", rng)
+    q = monitoring_stream(spark, str(input_dir), **kwargs)
+    q.awaitTermination(300)
+
+    # the stream runs each micro-batch under its run id as job group
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    metrics = spark.read.parquet(kwargs["metrics_path"])
+    assert metrics.where(F.col("metric_name") == "f1score").count() == 2
+    assert 0 < len(jobs) <= WARM_DROP_JOB_BUDGET, sorted(jobs)
