@@ -7,6 +7,11 @@ to Postgres, and serves two dashboard SQL shapes
 (churn-model-evaluation.json): latest-value-per-metric and per-metric time
 series. Here the store is any Spark-SQL-queryable table (parquet dir by
 default) and both shapes run through ``spark.sql`` verbatim.
+
+``register_metrics_view`` serves a dashboard refresh from one read: it
+registers an in-memory snapshot of the store, taken at registration, and
+every panel query runs on it. Re-register to see new appends; doing so
+releases the snapshot the name held before, so each view name holds one.
 """
 
 from __future__ import annotations
@@ -126,25 +131,38 @@ def compact_store(
     append adds small files (the streaming metrics sink produces one+
     per trigger), and scan cost degrades with file count. Rewrites the
     store to ``target_partitions`` files (per date partition when
-    ``partition_by_date``) via a temp dir + atomic-ish swap. Returns the
+    ``partition_by_date``) via a temp dir + rename swap. Returns the
     row count (callers assert it unchanged).
+
+    The swap is by rename: the store moves to a backup, the rewrite moves
+    into place, then the backup is deleted. If the second move fails, the
+    backup moves back, so the store is never missing.
 
     At warehouse scale this is OPTIMIZE/bin-packing on a Delta/Iceberg
     table; on plain parquet the rewrite is the portable equivalent. Run
     it from maintenance, never concurrently with an appender.
     """
+    import os
     import shutil
     import uuid
 
     df = spark.read.parquet(path)
     n = df.count()
-    tmp = f"{path}__compact_{uuid.uuid4().hex[:8]}"
+    tag = uuid.uuid4().hex[:8]
+    tmp, backup = f"{path}__compact_{tag}", f"{path}__old_{tag}"
     writer = df.repartition(target_partitions).write.mode("overwrite")
     if partition_by_date:
         writer = writer.partitionBy("metric_date")
     writer.parquet(tmp)
-    shutil.rmtree(path)
-    shutil.move(tmp, path)
+    shutil.move(path, backup)
+    try:
+        shutil.move(tmp, path)
+    except BaseException:
+        shutil.rmtree(path, ignore_errors=True)
+        os.rename(backup, path)
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
+    shutil.rmtree(backup)
     return n
 
 
@@ -215,13 +233,44 @@ def append_metrics_jdbc(
     stamped.write.jdbc(url, table, mode="append", properties=props)
 
 
+# The snapshot each (session, view name) holds, so re-registering a name
+# releases the one it replaces: a local checkpoint is not in Spark's
+# CacheManager, and ``DataFrame.unpersist`` does not release it.
+_snapshots: dict[tuple[str, str], DataFrame] = {}
+
+
 def register_metrics_view(
     spark: SparkSession, source: DataFrame | str, name: str = METRICS_TABLE
 ) -> None:
     """Expose the metrics table to Spark SQL so the dashboard queries run
-    verbatim (SURVEY §3.3)."""
+    verbatim (SURVEY §3.3).
+
+    The view is a snapshot taken at registration: the source is read
+    once into an executor-side local checkpoint, and every panel query
+    of a dashboard refresh runs on it instead of listing, opening and
+    scanning the store again. Appends after registration are not seen;
+    re-register to see them (a temp view over ``spark.read.parquet``
+    lists its files once, so this was already so). The snapshot has
+    ``ceil(sizeInBytes / spark.sql.files.maxPartitionBytes)`` partitions,
+    at least 1, so a small store is one partition and its ``ORDER BY``
+    and group-by panels plan no exchange. Its plan holds no file
+    relation, so later writes to the store do not recache it. Each
+    (session, name) holds one snapshot: re-registering a name releases
+    the snapshot it held before.
+    """
     df = spark.read.parquet(source) if isinstance(source, str) else source
-    df.createOrReplaceTempView(name)
+    size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    per_partition = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    # coalesce takes an int; a frame without size statistics reports
+    # Long.MaxValue bytes, and coalescing to more partitions is a no-op
+    partitions = min(max(1, -(-size // per_partition)), 2**31 - 1)
+    snapshot = df.coalesce(partitions).localCheckpoint(eager=True)
+    snapshot.createOrReplaceTempView(name)
+    key = (spark._jsparkSession.sessionUUID(), name)
+    old = _snapshots.get(key)
+    _snapshots[key] = snapshot
+    if old is not None:
+        old._jdf.queryExecution().analyzed().rdd().unpersist(True)
 
 
 def latest_metric_value(

@@ -4,7 +4,9 @@ from __future__ import annotations
 
 import os
 import random
+import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
 from churn_model_evaluation_platform_spark.functions.skew import salted_join
@@ -93,3 +95,32 @@ def test_compact_store_preserves_rows(spark, tmp_path):
     after = spark.read.parquet(path).orderBy("value").collect()
     assert n == 10 and after == before
     assert after_files < before_files and after_files == 1
+
+
+def test_compact_store_keeps_store_when_swap_fails(spark, tmp_path, monkeypatch):
+    from churn_model_evaluation_platform_spark.operators.metrics import compact_store
+
+    path = str(tmp_path / "m")
+    rows = [("f1score", float(i), "2026-08-10 10:00:00") for i in range(6)]
+    base = spark.createDataFrame(
+        rows, "metric_name string, value double, created_at string"
+    ).withColumn("created_at", F.to_timestamp("created_at"))
+    for i in range(3):
+        base.where(F.col("value") % 3 == i).write.mode("append").parquet(path)
+    before = spark.read.parquet(path).orderBy("value").collect()
+
+    move, calls = shutil.move, []
+
+    def second_move_fails(src, dst):
+        calls.append(src)
+        if len(calls) == 2:
+            raise OSError("injected failure of the second move")
+        return move(src, dst)
+
+    monkeypatch.setattr(shutil, "move", second_move_fails)
+    with pytest.raises(OSError, match="injected"):
+        compact_store(spark, path, target_partitions=1)
+    monkeypatch.undo()
+
+    assert spark.read.parquet(path).orderBy("value").collect() == before
+    assert os.listdir(tmp_path) == ["m"]

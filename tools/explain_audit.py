@@ -38,7 +38,6 @@ SINGLE_ROW_CROSS_OK = {
     "value_drift_psi",
     "value_drift_js",
     "value_drift_chi2",
-    "drifted_columns_count",
     "assess_data_drift",
     "duplicate_row_count",
     "dedup_ngram_jaccard",  # sizes frame joined back is small but keyed
