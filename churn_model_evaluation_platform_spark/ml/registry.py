@@ -1,94 +1,21 @@
-"""Model registry + reference-artifact lifecycle (SURVEY §2.A
-``registry_model_source`` / ``artifact_reference_source``; §2.C
-``model_promote_alias``).
+"""Filesystem model registry with each version's drift reference
+(SURVEY §2.A ``registry_model_source`` / ``artifact_reference_source``;
+§2.C ``model_promote_alias``).
 
-Two layers:
-
-- **Reference snapshots** (testable everywhere): the drift baseline the
-  reference attaches to each model version as a CSV artifact
-  (churn_model_training.py:180-188, reloaded
-  churn_prediction_pipeline.py:276-297) becomes a versioned Parquet
-  snapshot — columnar, splittable, schema-carrying. The snapshot is
-  broadcast-sized by construction (one training batch).
-
-- **MLflow registry** (gated import — not installed in the minimal test
-  container): model log/alias/load by ``models:/<name>@<alias>`` URI,
-  mirroring fetch_model churn_prediction_pipeline.py:87-113 and the
-  alias promotion churn_model_training.py:192-194.
+``LocalModelRegistry`` registers a fitted model, flips aliases and loads
+a version by alias, mirroring fetch_model churn_prediction_pipeline.py:
+87-113 and the alias promotion churn_model_training.py:192-194 without
+a registry server. The drift baseline the reference attaches to each
+model version as a CSV artifact (churn_model_training.py:180-188,
+reloaded churn_prediction_pipeline.py:276-297) is stored beside the
+model as a Parquet ``reference/`` snapshot.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-SNAPSHOT_BASE = "reference_snapshots"
-
-
-def write_reference_snapshot(
-    df: DataFrame, base_dir: str, model_name: str, version: int
-) -> str:
-    """Persist the drift-reference table for one model version
-    (the Spark-native form of the reference_data.csv artifact)."""
-    path = f"{base_dir}/{SNAPSHOT_BASE}/{model_name}/v{version}"
-    df.write.mode("overwrite").parquet(path)
-    return path
-
-
-def read_reference_snapshot(
-    spark: SparkSession, base_dir: str, model_name: str, version: int
-) -> DataFrame:
-    """Load the drift baseline attached to a model version
-    (churn_prediction_pipeline.py:276-297)."""
-    return spark.read.parquet(
-        f"{base_dir}/{SNAPSHOT_BASE}/{model_name}/v{version}"
-    )
-
-
-def _require_mlflow():
-    try:
-        import mlflow  # noqa: PLC0415
-
-        return mlflow
-    except ImportError as e:  # pragma: no cover - depends on environment
-        raise ImportError(
-            "mlflow is not installed in this environment; the registry "
-            "layer (models:/<name>@<alias> load, alias promotion) needs "
-            "it. The engine's scoring path accepts any fitted MLlib "
-            "model directly (operators/score.py) — mlflow is only the "
-            "registry transport."
-        ) from e
-
-
-def fetch_model_udf(spark: SparkSession, name: str, alias: str):
-    """Registry URI ``models:/<name>@<alias>`` → Arrow-vectorized scoring
-    UDF (fetch_model churn_prediction_pipeline.py:87-113 + the
-    model-as-UDF surface :196)."""
-    mlflow = _require_mlflow()
-    return mlflow.pyfunc.spark_udf(spark, f"models:/{name}@{alias}")
-
-
-def promote_alias(name: str, version: int, alias: str = "staging") -> None:
-    """Set the alias on a registered model version
-    (churn_model_training.py:192-194)."""
-    mlflow = _require_mlflow()
-    mlflow.tracking.MlflowClient().set_registered_model_alias(
-        name, alias, version
-    )
-
-
-__all__ = [
-    "fetch_model_udf",
-    "promote_alias",
-    "read_reference_snapshot",
-    "write_reference_snapshot",
-]
-
-
-# ---------------------------------------------------------------------------
-# Local filesystem registry — the mlflow-less counterpart
-# ---------------------------------------------------------------------------
-
 import json
+
+from pyspark.sql import DataFrame, SparkSession
 
 
 class LocalModelRegistry:

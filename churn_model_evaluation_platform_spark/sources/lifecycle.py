@@ -10,10 +10,10 @@ filesystem is resolved from the path's scheme. ``rename`` is atomic on
 HDFS/local and a server-side copy on S3A, exactly matching the
 reference's copy+delete semantics.
 
-Streaming note: when files are consumed via the file source, prefer the
-built-in ``cleanSource=archive`` option (streaming/file_stream.py) —
-these helpers are for the reference-shaped batch orchestration where
-the engine moves inputs itself.
+Streaming note: when files are consumed via the file source, the
+checkpoint already records which files were consumed — these helpers
+are for the reference-shaped batch orchestration where the engine moves
+inputs itself.
 """
 
 from __future__ import annotations

@@ -9,8 +9,7 @@ upload_simulation_script.py:23-35) with the Spark-native equivalent:
 
 Exactly-once file lifecycle comes from the checkpoint (replacing the
 reference's manual input→processing→processed/errored folder moves,
-churn_prediction_pipeline.py:642-680); ``cleanSource=archive`` optionally
-moves consumed files aside like the reference's `processed/` prefix.
+churn_prediction_pipeline.py:642-680).
 """
 
 from __future__ import annotations
@@ -24,28 +23,16 @@ from pyspark.sql.streaming import StreamingQuery
 BatchFn = Callable[[DataFrame, int], None]
 
 
-def read_file_stream(
-    spark: SparkSession,
-    input_dir: str,
-    schema,
-    fmt: str = "csv",
-    max_files_per_trigger: int = 1,
-    archive_dir: str | None = None,
-):
-    """One micro-batch per arriving file, tagged with its source path
+def read_file_stream(spark: SparkSession, input_dir: str, schema) -> DataFrame:
+    """One micro-batch per arriving CSV file, tagged with its source path
     (the reference keys everything by S3 object key)."""
-    reader = (
+    return (
         spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 1)
+        .option("header", True)
+        .csv(input_dir)
+        .withColumn("_source_file", F.input_file_name())
     )
-    if fmt == "csv":
-        reader = reader.option("header", True)
-    if archive_dir is not None:
-        reader = reader.option("cleanSource", "archive").option(
-            "sourceArchiveDir", archive_dir
-        )
-    stream = getattr(reader, fmt)(input_dir)
-    return stream.withColumn("_source_file", F.input_file_name())
 
 
 def run_foreach_batch(
@@ -63,26 +50,3 @@ def run_foreach_batch(
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def scoring_stream(
-    spark: SparkSession,
-    input_dir: str,
-    schema,
-    pipeline_fn: Callable[[DataFrame], None],
-    checkpoint_dir: str,
-    available_now: bool = True,
-    max_files_per_trigger: int = 1,
-) -> StreamingQuery:
-    """The reference's flagship trigger loop: every arriving file becomes
-    one scoring+monitoring run (churn_prediction_pipeline.py:813-905)."""
-    stream = read_file_stream(
-        spark, input_dir, schema, max_files_per_trigger=max_files_per_trigger
-    )
-
-    def _run(batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        pipeline_fn(batch)
-
-    return run_foreach_batch(stream, _run, checkpoint_dir, available_now)

@@ -11,6 +11,7 @@ continues — one bad drop never stalls the stream.
 
 from __future__ import annotations
 
+import csv
 from functools import reduce
 from typing import Callable
 from urllib.parse import unquote, urlsplit
@@ -101,13 +102,15 @@ def monitoring_stream(
         # read through a declared schema always has the declared columns,
         # so containment must be checked against what the file really
         # carries (reference reads + cleans the actual header,
-        # churn_prediction_pipeline.py:142-159). The file source names
-        # files by percent-encoded URI; a local file is read directly.
+        # churn_prediction_pipeline.py:142-159). The header is parsed as
+        # CSV (quoted names) past any UTF-8 BOM, as pandas reads it. The
+        # file source names files by percent-encoded URI; a local file is
+        # read directly.
         path = unquote(urlsplit(src).path) if src.startswith("file:") else src
         header_cols = None
         if path.startswith("/") and path.endswith(".csv"):
-            with open(path, encoding="utf-8", errors="replace") as f:
-                header_cols = [c.strip() for c in f.readline().split(",")]
+            with open(path, encoding="utf-8-sig", errors="replace", newline="") as f:
+                header_cols = [c.strip() for c in next(csv.reader(f), [])]
         v = validate_schema_containment(
             header_cols if header_cols is not None else data, expected, src
         )

@@ -2,8 +2,8 @@
 S3-drop → score → monitor → metrics-store → dashboard path in one test.
 
     train model on a baseline batch (churn-shaped, messy headers)
-    → CSV drops arrive in input/ (streaming file source, 1 batch/file)
-    → validate (extension + cleaned-space containment)
+    → CSV drops arrive in input/ (monitoring_stream, one run per file)
+    → validate (the file's own header, cleaned-space containment)
     → prepare (clean names, project, cast)
     → score with the TRAINED model (not a stub)
     → predictions parquet sink
@@ -17,25 +17,18 @@ Mirrors churn_prediction_pipeline.py:813-905 + the Grafana panel SQL
 
 from __future__ import annotations
 
+import os
 import random
 
-import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 
 from churn_model_evaluation_platform_spark.ml.training import fit_pipeline, predict
 from churn_model_evaluation_platform_spark.operators.metrics import (
-    append_metrics,
     register_metrics_view,
 )
-from churn_model_evaluation_platform_spark.operators.prep import (
-    prepare,
-    validate_extension,
-    validate_schema_containment,
-)
-from churn_model_evaluation_platform_spark.plans.pipeline import monitoring_run
 from churn_model_evaluation_platform_spark.schema import NUMERICAL_COLUMNS
-from churn_model_evaluation_platform_spark.streaming.file_stream import scoring_stream
+from churn_model_evaluation_platform_spark.streaming.monitor import monitoring_stream
 
 # Messy headers like the real drop files (double spaces, mixed case —
 # data/customer_churn_0.csv:1): cleaned space must match NUMERICAL_COLUMNS.
@@ -93,44 +86,38 @@ def test_flagship_end_to_end(spark, tmp_path):
 
     metrics_path = str(tmp_path / "drift_metrics")
     preds_path = str(tmp_path / "predictions")
+    errored = str(tmp_path / "errored")
     alerts: list[str] = []
-    batches: list[str] = []
 
-    def pipeline(batch):
-        src = batch.select("_source_file").first()["_source_file"]
-        batches.append(src)
-        # 3. validate: extension + cleaned-space containment
-        assert validate_extension(src).ok
-        v = validate_schema_containment(
-            batch.drop("_source_file"), NUMERICAL_COLUMNS + ["churn"], src
-        )
-        assert v.ok, v.error
-        # 4. prepare → 5. score with the trained model
-        prepared = prepare(batch.drop("_source_file"))
-        scored = predict(tm, prepared)
-        # 6. predictions sink (parquet, partitioned-by-nothing: tiny batch)
-        scored.write.mode("append").parquet(preds_path)
-        # 7. monitor vs the training baseline; 8. append to metrics store
-        res = monitoring_run(
-            scored,
-            baseline.select(*NUMERICAL_COLUMNS),
-            NUMERICAL_COLUMNS,
-            alert_sink=lambda s, m: alerts.append(s),
-        )
-        append_metrics(res.metrics, metrics_path)
-
-    q = scoring_stream(
+    # 3-8. validate the file's own (messy) header → prepare → score with
+    # the trained model → predictions sink → monitor vs the training
+    # baseline → metrics append, one run per file.
+    q = monitoring_stream(
         spark,
         str(input_dir),
         raw_schema,
-        pipeline,
+        reference=baseline.select(*NUMERICAL_COLUMNS),
+        feature_cols=NUMERICAL_COLUMNS,
+        score_fn=lambda b: predict(tm, b),
+        metrics_path=metrics_path,
         checkpoint_dir=str(tmp_path / "ckpt"),
-        available_now=True,
+        expected_columns=NUMERICAL_COLUMNS + ["churn"],
+        predictions_path=preds_path,
+        errored_dir=errored,
+        alert_sink=lambda s, m: alerts.append(s),
     )
     q.awaitTermination(300)
+    assert q.exception() is None
+
+    # Both messy headers validated in cleaned space: nothing was routed.
+    assert not os.path.exists(errored)
+    assert "Invalid input file" not in alerts
 
     # One run per file (reference: one flow run per S3 event).
-    assert len(batches) == 2
+    runs = spark.read.parquet(metrics_path).where(
+        F.col("metric_name") == "f1score"
+    )
+    assert runs.select("created_at").distinct().count() == 2
 
     # Shifted drop must raise the drift alert; clean drop must not alert
     # on drift. (churn_prediction_pipeline.py:868-876)

@@ -1,24 +1,9 @@
-"""Watermark lateness accounting (streaming/lateness.py): a three-batch
-file replay where the straggler arrives AFTER its window's state has
-been evicted — the drop count and emitted windows are deterministic by
-construction.
-
-Timing semantics this pins (learned empirically, worth recording): a
-late row that arrives while its window is STILL IN STATE gets merged —
-eviction happens at batch commit, one batch after the watermark passes
-the window — so `numRowsDroppedByWatermark` counts only rows whose
-window was already finalized, which is exactly the "data lost to
-lateness" number an on-call engineer needs."""
+"""Per-micro-batch data-quality gate over a replayed file stream:
+``dq_verify`` runs inside ``foreachBatch`` as an admission check."""
 
 from __future__ import annotations
 
 import os
-
-from pyspark.sql import functions as F
-
-from churn_model_evaluation_platform_spark.streaming.lateness import (
-    lateness_report,
-)
 
 
 def _write_one(df, dest):
@@ -29,66 +14,6 @@ def _write_one(df, dest):
     df.coalesce(1).write.mode("overwrite").parquet(tmp)
     shutil.move(glob.glob(os.path.join(tmp, "part-*.parquet"))[0], dest)
     shutil.rmtree(tmp, ignore_errors=True)
-
-
-def test_late_rows_dropped_and_counted(spark, tmp_path):
-    src = str(tmp_path / "src")
-    os.makedirs(src, exist_ok=True)
-    mk = lambda rows: spark.createDataFrame(
-        rows, "k string, ts_s string, v long"
-    ).select("k", F.to_timestamp("ts_s").alias("ts"), "v")
-    batches = [
-        # b0: events to 12:00 -> watermark after the batch = 11:50
-        mk(
-            [
-                ("a", "2024-01-01 10:00:30", 1),
-                ("a", "2024-01-01 11:00:30", 1),
-                ("a", "2024-01-01 12:00:00", 1),
-            ]
-        ),
-        # b1: on-time row; commit evicts+emits the 10:00 window
-        mk([("a", "2024-01-01 12:05:00", 1)]),
-        # b2: straggler for the already-finalized 10:00 window -> DROPPED
-        mk([("a", "2024-01-01 10:30:00", 99)]),
-    ]
-    for i, b in enumerate(batches):
-        dest = os.path.join(src, f"b{i}.parquet")
-        _write_one(b, dest)
-        os.utime(dest, (1_700_000_000 + i,) * 2)
-
-    stream = (
-        spark.readStream.schema(batches[0].schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
-    agg = (
-        stream.withWatermark("ts", "10 minutes")
-        .groupBy("k", F.window("ts", "1 hour").alias("w"))
-        .agg(F.sum("v").alias("total"))
-    )
-    # APPEND mode: watermark-based eviction (and the drop counter) only
-    # exists in append/update — complete mode keeps all state and
-    # accepts arbitrarily late rows.
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("late_test")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-
-    report = {r.batch_id: r for r in lateness_report(spark, q).collect()}
-    assert report[0].dropped_by_watermark == 0
-    assert report[1].dropped_by_watermark == 0
-    assert report[2].dropped_by_watermark == 1  # the 10:30 straggler
-    assert report[2].watermark == "2024-01-01T11:55:00.000Z"
-    totals = {
-        r.w.start.hour: r.total for r in spark.table("late_test").collect()
-    }
-    # v=99 never entered the finalized 10:00 window; later windows are
-    # still open (above the final watermark) so append emits only hour 10.
-    assert totals == {10: 1}, totals
 
 
 def test_streaming_dq_gate_per_batch(spark, tmp_path):

@@ -6,6 +6,7 @@ from __future__ import annotations
 import os
 import random
 
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, IntegerType, StructField, StructType
 
@@ -205,6 +206,48 @@ def test_drop_names_with_space_and_percent(spark, tmp_path):
     log = read_log(spark, f"{errored}/_logs/bad x.csv.log")
     assert len(log) == 1 and "expected structure" in log[0].lower()
     assert alerts.count("Invalid input file") == 1
+
+
+@pytest.mark.parametrize(
+    "header",
+    ['"a","b","churn"', "\ufeffa,b,churn"],
+    ids=["quoted_header", "utf8_bom"],
+)
+def test_header_parsed_as_csv(spark, tmp_path, header):
+    """The drop's header is read as pandas reads it: fully quoted names
+    and a UTF-8 byte-order mark are both valid headers, so the drop
+    lands and nothing is routed to ``errored/``."""
+    rng = random.Random(13)
+    input_dir = tmp_path / "input"
+    input_dir.mkdir()
+    drop = input_dir / "drop.csv"
+    _write_good(drop, rng)
+    drop.write_text(
+        drop.read_text().replace("a,b,churn", header, 1), encoding="utf-8"
+    )
+    alerts: list[str] = []
+    metrics_path = str(tmp_path / "metrics")
+    errored = str(tmp_path / "errored")
+
+    q = monitoring_stream(
+        spark,
+        str(input_dir),
+        SCHEMA,
+        _reference(spark, rng),
+        COLS,
+        score_fn=_score,
+        metrics_path=metrics_path,
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        errored_dir=errored,
+        alert_sink=lambda s, m: alerts.append(s),
+    )
+    q.awaitTermination(300)
+
+    assert q.exception() is None
+    metrics = spark.read.parquet(metrics_path)
+    assert metrics.where(F.col("metric_name") == "f1score").count() == 1
+    assert not os.path.exists(errored)
+    assert "Invalid input file" not in alerts
 
 
 def test_model_scores_each_row_once(spark, tmp_path):

@@ -1,13 +1,9 @@
-"""Random-search tuning loop + reference-snapshot lifecycle."""
+"""Random-search tuning loop."""
 
 from __future__ import annotations
 
 import pytest
 
-from churn_model_evaluation_platform_spark.ml.registry import (
-    read_reference_snapshot,
-    write_reference_snapshot,
-)
 from churn_model_evaluation_platform_spark.ml.training import random_search
 
 
@@ -40,11 +36,3 @@ def test_random_search_deterministic_params(train_df):
     _, _, h1 = random_search(train_df, n_trials=2, k=2, seed=7)
     _, _, h2 = random_search(train_df, n_trials=2, k=2, seed=7)
     assert [p for p, _ in h1] == [p for p, _ in h2]
-
-
-def test_reference_snapshot_roundtrip(spark, tmp_path, train_df):
-    path = write_reference_snapshot(train_df, str(tmp_path), "churn_model", 3)
-    assert "churn_model/v3" in path
-    back = read_reference_snapshot(spark, str(tmp_path), "churn_model", 3)
-    assert back.count() == train_df.count()
-    assert set(back.columns) == set(train_df.columns)

@@ -1,6 +1,7 @@
-"""File-drop streaming: one micro-batch per file, exactly-once via
-checkpoint (replaces the reference's S3→Lambda→Prefect trigger +
-move-to-folder lifecycle)."""
+"""File-drop streaming primitives (``read_file_stream`` +
+``run_foreach_batch``, the pair ``monitoring_stream`` drives): one
+micro-batch per file, exactly-once via checkpoint (replaces the
+reference's S3→Lambda→Prefect trigger + move-to-folder lifecycle)."""
 
 from __future__ import annotations
 
@@ -13,7 +14,10 @@ from pyspark.sql.types import (
 )
 
 from churn_model_evaluation_platform_spark.operators.quality import classification_scores
-from churn_model_evaluation_platform_spark.streaming.file_stream import scoring_stream
+from churn_model_evaluation_platform_spark.streaming.file_stream import (
+    read_file_stream,
+    run_foreach_batch,
+)
 
 SCHEMA = StructType(
     [
@@ -21,6 +25,14 @@ SCHEMA = StructType(
         StructField("churn", IntegerType()),
     ]
 )
+
+
+def _stream(spark, input_dir, pipeline, checkpoint_dir):
+    return run_foreach_batch(
+        read_file_stream(spark, input_dir, SCHEMA),
+        lambda batch, _batch_id: pipeline(batch),
+        checkpoint_dir,
+    )
 
 
 def _drop_file(path, rows):
@@ -49,14 +61,7 @@ def test_one_batch_per_file_scoring(spark, tmp_path):
         seen_files.append(sorted(files))
         classification_scores(scored).write.mode("append").parquet(metrics_path)
 
-    q = scoring_stream(
-        spark,
-        str(input_dir),
-        SCHEMA,
-        pipeline,
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        available_now=True,
-    )
+    q = _stream(spark, str(input_dir), pipeline, str(tmp_path / "ckpt"))
     q.awaitTermination(120)
 
     # one micro-batch per file (maxFilesPerTrigger=1)
@@ -83,12 +88,12 @@ def test_checkpoint_exactly_once(spark, tmp_path):
         out.append(batch.count())
 
     _drop_file(input_dir / "f1.csv", [(1.0, 0)])
-    q = scoring_stream(spark, str(input_dir), SCHEMA, pipeline, ckpt)
+    q = _stream(spark, str(input_dir), pipeline, ckpt)
     q.awaitTermination(120)
     assert out == [1]
 
     # restart with same checkpoint: old file NOT reprocessed, new one is
     _drop_file(input_dir / "f2.csv", [(2.0, 1), (3.0, 0)])
-    q2 = scoring_stream(spark, str(input_dir), SCHEMA, pipeline, ckpt)
+    q2 = _stream(spark, str(input_dir), pipeline, ckpt)
     q2.awaitTermination(120)
     assert out == [1, 2]
