@@ -47,6 +47,3 @@ def perm_expr(h: Column, a: int, b: int) -> Column:
     """(a*h + b) mod P — overflow-safe for h < 2^28."""
     return (h * F.lit(a) + F.lit(b)) % F.lit(MERSENNE_31)
 
-
-def perm_sql(h_expr: str, a: int, b: int) -> str:
-    return f"(({h_expr}) * {a} + {b}) % {MERSENNE_31}"

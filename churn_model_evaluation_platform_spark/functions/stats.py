@@ -118,77 +118,6 @@ def partitioned_prefix_sum(
     )
 
 
-def grouped_prefix_sum(
-    df: DataFrame,
-    group_col: str,
-    order_col: str,
-    sum_cols: list[str],
-    num_buckets: int | None = None,
-) -> DataFrame:
-    """Per-group running totals ordered by ``order_col`` WITHIN each
-    group, with no single-reducer-per-group window: each group's key
-    range is split into ~balanced buckets, so one group's ordering work
-    spreads over ``num_buckets`` reducers.
-
-    Fully lazy — ONE plan, no driver action: per-group quantile
-    boundaries are a grouped ``percentile_approx`` aggregate joined back
-    by broadcast (one row per group); the bucket id is
-    ``size(filter(bounds, b -> v > b))`` — a pure expression. Local
-    window sums per (group, bucket); cross-bucket offsets from the
-    per-(group, bucket) totals windowed per group (tiny); broadcast
-    joined back. Adds ``cum_<c>`` and grand-total ``tot_<c>`` columns.
-    """
-    p = num_buckets or df.sparkSession.sparkContext.defaultParallelism
-    probs = [i / p for i in range(1, p)]
-    bounds = df.groupBy(group_col).agg(
-        F.array_distinct(
-            F.percentile_approx(
-                order_col, F.array(*[F.lit(q) for q in probs]), F.lit(10_000)
-            )
-        ).alias("__bounds")
-    )
-    v = F.col(order_col)
-    # explicit, so an input already partitioned by the group alone still
-    # spreads each group over its buckets
-    bucketed = (
-        df.join(F.broadcast(bounds), group_col)
-        .withColumn("__bucket", F.size(F.filter(F.col("__bounds"), lambda b: v > b)))
-        .drop("__bounds")
-        .repartition(group_col, "__bucket")
-    )
-    w = Window.partitionBy(group_col, "__bucket").orderBy(order_col)
-    local = bucketed.select(
-        "*", *[F.sum(c).over(w).alias(f"cum_{c}") for c in sum_cols]
-    )
-    totals = bucketed.groupBy(group_col, "__bucket").agg(
-        *[F.sum(c).alias(f"tot_{c}") for c in sum_cols]
-    )
-    w_off = (
-        Window.partitionBy(group_col)
-        .orderBy("__bucket")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    w_grand = Window.partitionBy(group_col)
-    offsets = totals.select(
-        group_col,
-        "__bucket",
-        *[
-            F.coalesce(F.sum(f"tot_{c}").over(w_off), F.lit(0)).alias(f"off_{c}")
-            for c in sum_cols
-        ],
-        *[F.sum(f"tot_{c}").over(w_grand).alias(f"tot_{c}") for c in sum_cols],
-    )
-    out = local.join(F.broadcast(offsets), [group_col, "__bucket"])
-    return out.select(
-        *df.columns,
-        *[
-            (F.col(f"cum_{c}") + F.col(f"off_{c}")).alias(f"cum_{c}")
-            for c in sum_cols
-        ],
-        *[F.col(f"tot_{c}") for c in sum_cols],
-    )
-
-
 def ks_pvalue_expr(d: Column, n: Column, m: Column) -> Column:
     """Asymptotic two-sided KS p-value as a Catalyst expression.
 

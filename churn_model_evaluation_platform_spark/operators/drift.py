@@ -15,18 +15,9 @@ counts ordered by value, and finish with the max absolute normalized
 difference and its asymptotic p-value. ``value_drift``, ``ks_2samp`` and
 ``value_drift_by_window`` all run that one kernel (``_ks``).
 
-The running counts take one of two routes, picked by one rule: a column
-whose distinct count is at most ``WINDOWED_MAX_DISTINCT`` takes the
-per-key window (one reducer per column; no boundary pass, which
-dominates monitoring-sized batches); any other column — including one
-without a count — takes ``functions/stats.grouped_prefix_sum`` (each
-column's value range split over balanced buckets, so no serial stage at
-any cardinality). The count is an input measurement, never a
-caller-chosen strategy: ``estimate_distinct_counts`` reads it exactly
-off the tie counts, which hold one row per distinct value, so a caller
-that caches the tie counts (``plans/pipeline.monitoring_run``) measures
-every column and runs both routes without another pass over the batch.
-Both routes produce identical rows.
+The running counts come from one window per key, so one column's
+distinct values are ordered in one task, which is measured up to 10^7
+distinct values (SCALE.md §Drift statistics).
 
 p-values use the asymptotic Kolmogorov series (functions/stats.py) since
 scipy is deliberately not a dependency. Unit tests pin values against
@@ -39,13 +30,11 @@ keep the stat pluggable.
 from __future__ import annotations
 
 from collections.abc import Iterable
-from functools import reduce
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.stats import (
-    grouped_prefix_sum,
     ks_pvalue_expr,
     partitioned_prefix_sum,
     range_boundaries,
@@ -54,7 +43,7 @@ from .metrics import metrics_frame
 
 P_VALUE_DRIFT_THRESHOLD = 0.05  # churn_prediction_pipeline.py:419
 DATASET_DRIFT_SHARE = 0.5  # churn_prediction_pipeline.py:415
-WINDOWED_MAX_DISTINCT = 250_000  # per-column single-reducer comfort zone
+WINDOWED_MAX_DISTINCT = 250_000  # read only by perfbench's traced install
 
 
 def _pool(
@@ -107,34 +96,23 @@ def _tie_counts(
     )
 
 
-def _ks(counts: DataFrame, keys: list[str], prefix: bool = False) -> DataFrame:
+def _ks(counts: DataFrame, keys: list[str]) -> DataFrame:
     """The KS kernel: tie counts ``(keys…, v, r, c)`` → one row per key
     ``(keys…, ks_stat, p_value, n_ref, n_cur)``.
 
-    Running counts come from a window partitioned by the keys, or — with
-    ``prefix`` and a single key — from ``grouped_prefix_sum``. A key with
+    Running counts come from a window partitioned by the keys. A key with
     no values on one side has no ECDF there: its ks_stat and p_value are
     null instead of a division-by-zero error.
     """
-    if prefix:
-        (key,) = keys
-        cums = grouped_prefix_sum(counts, key, "v", ["r", "c"]).select(
-            key,
-            "cum_r",
-            "cum_c",
-            F.col("tot_r").alias("n_ref"),
-            F.col("tot_c").alias("n_cur"),
-        )
-    else:
-        w = Window.partitionBy(*keys).orderBy("v")  # 1 row per v → tie-safe
-        tot = Window.partitionBy(*keys)
-        cums = counts.select(
-            *keys,
-            F.sum("r").over(w).alias("cum_r"),
-            F.sum("c").over(w).alias("cum_c"),
-            F.sum("r").over(tot).alias("n_ref"),
-            F.sum("c").over(tot).alias("n_cur"),
-        )
+    w = Window.partitionBy(*keys).orderBy("v")  # 1 row per v → tie-safe
+    tot = Window.partitionBy(*keys)
+    cums = counts.select(
+        *keys,
+        F.sum("r").over(w).alias("cum_r"),
+        F.sum("c").over(w).alias("cum_c"),
+        F.sum("r").over(tot).alias("n_ref"),
+        F.sum("c").over(tot).alias("n_cur"),
+    )
     n_ref, n_cur = F.col("n_ref"), F.col("n_cur")
     gap = F.abs(F.col("cum_r") / n_ref - F.col("cum_c") / n_cur)
     stat = cums.groupBy(*keys).agg(
@@ -155,86 +133,39 @@ def _ks(counts: DataFrame, keys: list[str], prefix: bool = False) -> DataFrame:
 def tie_counts(ref: DataFrame, cur: DataFrame, columns: list[str]) -> DataFrame:
     """Tie counts ``(column, v, r, c)`` of every column in one
     aggregation: one row per distinct non-null value, with its reference
-    and current counts. Partitioned by column, so per-column work over
-    it (distinct counts, the window route) shuffles nothing more."""
+    and current counts. Partitioned by column, so the per-column window
+    over it shuffles nothing more."""
     keys = ["column"]
     return _tie_counts(_long(ref, columns), _long(cur, columns), keys).repartition(
         *keys
     )
 
 
+# read only by perfbench's traced install, which wraps this name
 def estimate_distinct_counts(counts: DataFrame, columns: list[str]) -> dict[str, int]:
-    """Each column's exact pooled distinct count, read off ``tie_counts``
-    output (one row per distinct value) in one small aggregation. A
-    column with no non-null value on either side counts 0."""
+    """Each column's pooled distinct count, off ``tie_counts`` output."""
     found = dict(counts.groupBy("column").count().collect())
     return {c: int(found.get(c, 0)) for c in columns}
 
 
-def value_drift_from_counts(
-    counts: DataFrame, columns: list[str], distinct_estimates: dict[str, int]
-) -> DataFrame:
-    """``value_drift`` over ``tie_counts`` output, with no Spark job.
-    ``distinct_estimates`` maps column → distinct count and routes each
-    column: at most ``WINDOWED_MAX_DISTINCT`` → the per-column window;
-    above it, or missing from the dict → the grouped prefix sum."""
-    windowed = [
-        c
-        for c in columns
-        if distinct_estimates.get(c, WINDOWED_MAX_DISTINCT + 1)
-        <= WINDOWED_MAX_DISTINCT
-    ]
-    prefix = [c for c in columns if c not in windowed]
-    parts = [
-        _ks(counts.where(F.col("column").isin(cols)), ["column"], p)
-        for cols, p in ((windowed, False), (prefix, True))
-        if cols
-    ]
-    return reduce(DataFrame.unionAll, parts)
-
-
-def value_drift(
-    ref: DataFrame,
-    cur: DataFrame,
-    columns: list[str],
-    distinct_estimates: dict[str, int] | None = None,
-) -> DataFrame:
-    """Per-column two-sample KS drift for a set of columns in one plan.
+def value_drift(ref: DataFrame, cur: DataFrame, columns: list[str]) -> DataFrame:
+    """Per-column two-sample KS drift for a set of columns in one lazy
+    plan (building it runs no Spark job).
 
     Returns ``(column string, ks_stat double, p_value double, n_ref
     long, n_cur long)``, one row per input column that has a non-null
     value on either side.
-
-    Columns are routed as in ``value_drift_from_counts``. With
-    ``distinct_estimates``, plan construction runs no Spark job; with
-    ``None`` the exact counts are measured first by one eager
-    ``estimate_distinct_counts`` job over the tie counts.
     """
     if not columns:
         raise ValueError("columns must be non-empty")
-    counts = tie_counts(ref, cur, columns)
-    est = (
-        distinct_estimates
-        if distinct_estimates is not None
-        else estimate_distinct_counts(counts, columns)
-    )
-    return value_drift_from_counts(counts, columns, est)
+    return _ks(tie_counts(ref, cur, columns), ["column"])
 
 
-def ks_2samp(
-    ref: DataFrame,
-    cur: DataFrame,
-    column: str,
-    distinct_estimate: int | None = None,
-) -> DataFrame:
+def ks_2samp(ref: DataFrame, cur: DataFrame, column: str) -> DataFrame:
     """Two-sample KS over one column: ``value_drift`` on ``[column]``
     projected to one row ``(ks_stat, p_value, n_ref, n_cur)`` (no row
-    when neither side has a non-null value). ``distinct_estimate``
-    routes the column exactly as ``value_drift``'s estimates do; without
-    it, one job measures the column's distinct count at plan construction.
-    """
-    est = None if distinct_estimate is None else {column: distinct_estimate}
-    return value_drift(ref, cur, [column], est).select(
+    when neither side has a non-null value)."""
+    return value_drift(ref, cur, [column]).select(
         "ks_stat", "p_value", "n_ref", "n_cur"
     )
 

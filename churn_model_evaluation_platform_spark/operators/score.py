@@ -7,26 +7,17 @@ DataFrame:
 
 - a ``pyspark.ml`` Model/PipelineModel (JVM-side, preferred — codegen'd
   vector ops, no Python in the hot path),
-- an MLflow pyfunc URI via ``mlflow.pyfunc.spark_udf`` (Arrow-vectorized
-  pandas UDF) when mlflow is installed — gated import,
-- any column expression (used for deterministic test scorers).
+- pinned logistic-regression weights applied as one column expression.
 """
 
 from __future__ import annotations
 
 from typing import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..schema import TARGET_PREDICTION_COLUMN
-
-
-def score_with_expr(
-    df: DataFrame, expr: Column, out_col: str = TARGET_PREDICTION_COLUMN
-) -> DataFrame:
-    """Score with a deterministic column expression (test/stub scorer)."""
-    return df.withColumn(out_col, expr.cast("int"))
 
 
 def score_with_ml_model(
@@ -80,17 +71,3 @@ def score_with_logistic_weights(
         F.round(F.lit(1.0) / (F.lit(1.0) + F.exp(-margin)), proba_decimals),
     ).withColumn(out_col, (margin > 0).cast("int"))
 
-
-def mlflow_model_udf(spark, model_uri: str):
-    """``mlflow.pyfunc.spark_udf`` scorer — Arrow-vectorized. Available
-    only when mlflow is installed (it is not in the minimal environment);
-    mirrors registry fetch at churn_prediction_pipeline.py:87-113.
-    """
-    try:
-        import mlflow  # noqa: PLC0415
-    except ImportError as e:  # pragma: no cover - environment-dependent
-        raise NotImplementedError(
-            "mlflow is not installed in this environment; use "
-            "score_with_ml_model with a pyspark.ml model instead"
-        ) from e
-    return mlflow.pyfunc.spark_udf(spark, model_uri)  # pragma: no cover

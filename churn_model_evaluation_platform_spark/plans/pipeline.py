@@ -35,9 +35,8 @@ from ..operators.drift import (
     assess_data_drift,
     assess_prediction_scores,
     drifted_columns_count_rows,
-    estimate_distinct_counts,
-    tie_counts,
-    value_drift_from_counts,
+    estimate_distinct_counts,  # re-exported for perfbench's traced install
+    value_drift,
 )
 from ..operators.metrics import metrics_frame, with_created_at
 from ..operators.quality import (
@@ -93,9 +92,8 @@ def monitoring_run(
     reference's alert predicates (churn_prediction_pipeline.py:864-896).
 
     ``current`` must already carry ``actual_col`` + ``predicted_col``
-    (the output of scoring). Two Spark actions: one measures each
-    column's distinct count off the cached tie counts, one collects the
-    metric rows. Returns those rows as the long-format metrics DataFrame
+    (the output of scoring). One Spark action collects the metric rows.
+    Returns those rows as the long-format metrics DataFrame
     (metric_name, value, created_at) ready for the append sink.
     """
     spark = current.sparkSession
@@ -103,11 +101,8 @@ def monitoring_run(
     # the batch, cache() is a no-op and it is theirs to release
     owns_current_cache = not current.is_cached
     current = current.cache()
-    counts = tie_counts(reference, current, feature_cols).cache()
     try:
-        with job_layer(spark, "drift"):
-            distinct = estimate_distinct_counts(counts, feature_cols)
-        drift = value_drift_from_counts(counts, feature_cols, distinct)
+        drift = value_drift(reference, current, feature_cols)
         metrics = quality_scores(current, actual_col, predicted_col).unionAll(
             drift.select(
                 F.concat(F.lit("valuedrift_"), F.col("column")).alias("metric_name"),
@@ -122,7 +117,6 @@ def monitoring_run(
         with job_layer(spark, "quality+drift"):
             collected = metrics.collect()
     finally:
-        counts.unpersist()
         if owns_current_cache:
             current.unpersist()
     rows = [(r["metric_name"], r["value"]) for r in collected]
@@ -166,6 +160,6 @@ __all__ = [
     "assess_data_drift",
     "assess_prediction_scores",
     "classification_scores",
-    "estimate_distinct_counts",
+    "estimate_distinct_counts",  # read only by perfbench's traced install
     "per_label_scores",
 ]

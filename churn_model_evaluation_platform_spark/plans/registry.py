@@ -343,12 +343,11 @@ def q_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("value_drift_scalable", _VALUE_DRIFT_SQL)
 def q_value_drift_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Same semantics/oracle as value_drift, but pinned to the grouped
-    # range-partitioned prefix-sum route (an empty estimates dict sends
-    # every column there): no per-column serial reducer — the 100 TB
-    # route, proven identical by the shared oracle.
+    # Same semantics/oracle as value_drift, and now the same route: the
+    # per-column window that value_drift runs (kept under this name for
+    # bench.py's headline and slope queries).
     ref, cur = _drift_inputs(spark, sf_dir)
-    drift = value_drift(ref, cur, ["value", "user_id"], distinct_estimates={})
+    drift = value_drift(ref, cur, ["value", "user_id"])
     return drift.select(
         F.col("column").alias("column_name"),
         "ks_stat",
@@ -366,8 +365,7 @@ FROM stat_v
 """,
 )
 def q_value_drift_ks(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Single-column KS: the one-column value_drift, routed by its
-    # measured distinct count.
+    # Single-column KS: the one-column value_drift.
     ref, cur = _drift_inputs(spark, sf_dir)
     return ks_2samp(ref, cur, "value").select(
         "ks_stat", F.col("n_ref").cast("bigint").alias("n_ref"),

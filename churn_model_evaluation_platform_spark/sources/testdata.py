@@ -163,9 +163,3 @@ def normalize_event_ts(df: DataFrame, col: str = "ts") -> DataFrame:
         df = df.withColumn(col, F.col(col).cast("timestamp"))
     return df
 
-
-def register_views(spark: SparkSession, sf_dir: str | None = None) -> None:
-    """Register every table as a temp view so `spark.sql` queries mirror
-    the driver's DuckDB oracle environment."""
-    for t in TABLES:
-        load_table(spark, t, sf_dir).createOrReplaceTempView(t)

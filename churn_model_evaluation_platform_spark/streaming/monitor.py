@@ -12,16 +12,19 @@ continues — one bad drop never stalls the stream.
 from __future__ import annotations
 
 import csv
-from functools import reduce
 from typing import Callable
 from urllib.parse import unquote, urlsplit
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..operators.metrics import append_metrics, append_metrics_jdbc
-from ..operators.prep import prepare, validate_schema_containment
+from ..operators.prep import (
+    ValidationResult,
+    clean_name,
+    prepare,
+    validate_schema_containment,
+)
 from ..plans.pipeline import AlertSink, job_layer, monitoring_run
 from ..sources.lifecycle import append_log
 from .file_stream import read_file_stream, run_foreach_batch
@@ -53,7 +56,7 @@ def monitoring_stream(
     (must add ``churn_prediction``; e.g. ``lambda b: predict(tm, b)``).
 
     Every arriving file becomes one run: validate (cleaned-space
-    containment) → prepare → score → [predictions sink] → quality +
+    containment, then the schema's column order) → prepare → score → [predictions sink] → quality +
     drift vs ``reference`` → metrics append → alert predicates.
 
     ``metrics_jdbc_url`` additionally lands each micro-batch's metrics
@@ -66,30 +69,23 @@ def monitoring_stream(
     expected = expected_columns or feature_cols
 
     def run_one(batch: DataFrame, batch_id: int) -> None:
-        # One micro-batch may carry several source files (trigger rate is
-        # a tuning knob, not a semantic contract) — process each file
-        # under its OWN validation verdict, like the reference's
-        # one-run-per-file state machine. An empty batch has no files.
+        # read_file_stream pins maxFilesPerTrigger=1, so a micro-batch
+        # holds at most one file: one run per file, like the reference's
+        # one-run-per-file state machine. An empty batch has no row.
         with job_layer(spark, "validate"):
-            srcs = [
-                r["_source_file"]
-                for r in batch.select("_source_file").distinct().collect()
-            ]
-        metric_frames = []
-        for src in sorted(srcs):
-            m = _process_file(src, batch.where(F.col("_source_file") == src))
-            if m is not None:
-                metric_frames.append(m)
-        if not metric_frames:
+            first = batch.select("_source_file").first()
+        if first is None:
             return
-        all_metrics = reduce(DataFrame.unionAll, metric_frames)
+        metrics = _process_file(first["_source_file"], batch)
+        if metrics is None:
+            return
         with job_layer(spark, "append"):
             append_metrics(
-                all_metrics, metrics_path, partition_by_date=partition_metrics_by_date
+                metrics, metrics_path, partition_by_date=partition_metrics_by_date
             )
             if metrics_jdbc_url is not None:
                 append_metrics_jdbc(
-                    all_metrics,
+                    metrics,
                     metrics_jdbc_url,
                     metrics_jdbc_table,
                     metrics_jdbc_properties,
@@ -114,6 +110,8 @@ def monitoring_stream(
         v = validate_schema_containment(
             header_cols if header_cols is not None else data, expected, src
         )
+        if v.ok and header_cols is not None:
+            v = _header_order(header_cols, data.columns, src)
         if not v.ok:
             with job_layer(spark, "validate"):
                 if errored_dir is not None:
@@ -141,6 +139,25 @@ def monitoring_stream(
 
     stream = read_file_stream(spark, input_dir, schema)
     return run_foreach_batch(stream, run_one, checkpoint_dir, available_now)
+
+
+def _header_order(header: list[str], columns: list[str], src: str) -> ValidationResult:
+    """The CSV reader applies the stream schema by position and ignores
+    the header, so a file lands only if its cleaned header starts with
+    the schema's columns in order (trailing extra columns are fine);
+    anything else would be read into the wrong columns."""
+    have = [clean_name(c) for c in header]
+    for i, want in enumerate(clean_name(c) for c in columns):
+        got = have[i] if i < len(have) else "nothing"
+        if got != want:
+            return ValidationResult(
+                ok=False,
+                error=(
+                    f"Input file {src} has {got} as column {i + 1}, where the "
+                    f"schema expects {want}: its columns are out of order"
+                ),
+            )
+    return ValidationResult(ok=True)
 
 
 __all__ = ["monitoring_stream"]

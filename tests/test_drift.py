@@ -123,80 +123,9 @@ def test_assess_prediction_scores(spark):
     assert alert2 is False and failing2 == []
 
 
-def _route_rows(df):
-    return sorted(
-        (r["column"], round(r["ks_stat"], 9), round(r["p_value"], 9))
-        for r in df.collect()
-    )
-
-
-def test_value_drift_auto_routes_and_matches(spark):
-    # The window route ({c: 0}), the prefix-sum route ({}) and the
-    # measured routing (no estimates) must produce exactly the same rows.
-    import random
-
-    rng = random.Random(7)
-    ref = spark.createDataFrame(
-        [(rng.gauss(0, 1), float(rng.randrange(5))) for _ in range(400)],
-        ["cont", "disc"],
-    )
-    cur = spark.createDataFrame(
-        [(rng.gauss(0.5, 1), float(rng.randrange(5))) for _ in range(300)],
-        ["cont", "disc"],
-    )
-    cols = ["cont", "disc"]
-    expect = _route_rows(value_drift(ref, cur, cols, {c: 0 for c in cols}))
-    assert _route_rows(value_drift(ref, cur, cols, {})) == expect
-    assert _route_rows(value_drift(ref, cur, cols)) == expect
-
-
-def test_value_drift_auto_mixed_cardinality(spark, monkeypatch):
-    # Force the two columns into DIFFERENT routes by lowering the
-    # threshold between their cardinalities: results still identical.
-    from churn_model_evaluation_platform_spark.operators import drift as dmod
-
-    ref = spark.range(0, 500).selectExpr(
-        "CAST(id AS DOUBLE) AS wide", "CAST(id % 3 AS DOUBLE) AS narrow"
-    )
-    cur = spark.range(0, 400).selectExpr(
-        "CAST(id * 2 AS DOUBLE) AS wide", "CAST(id % 3 AS DOUBLE) AS narrow"
-    )
-    monkeypatch.setattr(dmod, "WINDOWED_MAX_DISTINCT", 10)
-    cols = ["wide", "narrow"]
-    mixed = dmod.value_drift(ref, cur, cols)  # measured: wide > 10 > narrow
-    windowed = dmod.value_drift(ref, cur, cols, {c: 0 for c in cols})
-    assert _route_rows(mixed) == _route_rows(windowed)
-
-
-def test_value_drift_measures_and_routes_without_estimates(spark, monkeypatch):
-    # With no estimates passed, value_drift measures the distinct counts
-    # itself: a column above WINDOWED_MAX_DISTINCT must take the
-    # prefix-sum route, and still return the window route's rows.
-    from churn_model_evaluation_platform_spark.operators import drift as dmod
-
-    ref = spark.range(0, 500).selectExpr("CAST(id AS DOUBLE) AS wide")
-    cur = spark.range(0, 400).selectExpr("CAST(id * 2 AS DOUBLE) AS wide")
-    windowed = _route_rows(dmod.value_drift(ref, cur, ["wide"], {"wide": 0}))
-    calls = []
-    real = dmod.grouped_prefix_sum
-
-    def spy(*args, **kwargs):
-        calls.append(args[1])
-        return real(*args, **kwargs)
-
-    monkeypatch.setattr(dmod, "grouped_prefix_sum", spy)
-    monkeypatch.setattr(dmod, "WINDOWED_MAX_DISTINCT", 10)
-    measured = dmod.value_drift(ref, cur, ["wide"])
-    assert calls == ["column"]
-    assert _route_rows(measured) == windowed
-
-
 def test_value_drift_auto_with_estimates_is_lazy(spark):
-    # With precomputed estimates, routing must not run ANY Spark job at
-    # plan-construction time — on either route — and every route must
-    # produce the window route's rows.
-    from churn_model_evaluation_platform_spark.operators import drift as dmod
-
+    # Building the value_drift and ks_2samp plans runs no Spark job; the
+    # tie counts are read only when the result is.
     ref = spark.range(0, 300).selectExpr(
         "CAST(id AS DOUBLE) AS a", "CAST(id % 4 AS DOUBLE) AS b"
     )
@@ -205,60 +134,25 @@ def test_value_drift_auto_with_estimates_is_lazy(spark):
     )
     tracker = spark.sparkContext.statusTracker()
     before = len(tracker.getJobIdsForGroup(None))
-    lazy = dmod.value_drift(
-        ref,
-        cur,
-        ["a", "b"],
-        distinct_estimates={"a": dmod.WINDOWED_MAX_DISTINCT + 5, "b": 4},
-    )
-    ks = dmod.ks_2samp(ref, cur, "a", distinct_estimate=7)
-    # a column missing from the estimates dict takes the prefix-sum route
-    missing = dmod.value_drift(ref, cur, ["a"], distinct_estimates={})
+    lazy = value_drift(ref, cur, ["a", "b"])
+    ks = ks_2samp(ref, cur, "a")
     assert len(tracker.getJobIdsForGroup(None)) == before  # no job ran
-    windowed = dmod.value_drift(ref, cur, ["a", "b"], {"a": 0, "b": 0})
-    assert _route_rows(lazy) == _route_rows(windowed)
-    assert _route_rows(missing) == [
-        r for r in _route_rows(windowed) if r[0] == "a"
-    ]
-    eager = dmod.ks_2samp(ref, cur, "a").first()
-    got = ks.first()
-    assert round(got["ks_stat"], 9) == round(eager["ks_stat"], 9)
-
-
-def test_ks_2samp_strategies_identical(spark):
-    # ks_2samp on the window route, the prefix-sum route and the
-    # measured route returns the same single row.
-    from churn_model_evaluation_platform_spark.operators.drift import (
-        WINDOWED_MAX_DISTINCT,
+    got = {r["column"]: r["ks_stat"] for r in lazy.collect()}
+    assert got["a"] == pytest.approx(
+        brute_ks([float(i) for i in range(300)], [float(3 * i) for i in range(200)]),
+        abs=1e-12,
     )
-
-    ref = _df(spark, [1, 2, 2, 3, 5, 8])
-    cur = _df(spark, [2, 3, 3, 4, 9])
-    rows = {}
-    for est in (0, WINDOWED_MAX_DISTINCT + 1, None):
-        got = ks_2samp(ref, cur, "v", distinct_estimate=est).collect()
-        assert len(got) == 1
-        r = got[0]
-        rows[est] = (
-            round(r["ks_stat"], 9), round(r["p_value"], 9), r["n_ref"], r["n_cur"]
-        )
-    assert rows[0] == rows[WINDOWED_MAX_DISTINCT + 1] == rows[None]
+    assert got["b"] == pytest.approx(0.0)
+    assert ks.first()["ks_stat"] == got["a"]
 
 
 def test_ks_2samp_one_side_empty_is_one_null_row(spark):
     # A side with no non-null values has no ECDF: one row with null
-    # ks_stat/p_value and n = 0 on that side — on both routes.
-    from churn_model_evaluation_platform_spark.operators.drift import (
-        WINDOWED_MAX_DISTINCT,
-    )
-
+    # ks_stat/p_value and n = 0 on that side, whichever side it is.
     ref = _df(spark, [1, 2, 2, 3])
     cur = spark.createDataFrame([(None,), (None,)], "v double")
-    for a, b, n, est in (
-        (ref, cur, (4, 0), 0),  # window route, current side empty
-        (cur, ref, (0, 4), WINDOWED_MAX_DISTINCT + 1),  # prefix, ref empty
-    ):
-        got = ks_2samp(a, b, "v", distinct_estimate=est).collect()
+    for a, b, n in ((ref, cur, (4, 0)), (cur, ref, (0, 4))):
+        got = ks_2samp(a, b, "v").collect()
         assert len(got) == 1
         r = got[0]
         assert (r["ks_stat"], r["p_value"]) == (None, None)

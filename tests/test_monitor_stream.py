@@ -250,6 +250,58 @@ def test_header_parsed_as_csv(spark, tmp_path, header):
     assert "Invalid input file" not in alerts
 
 
+@pytest.mark.parametrize(
+    "header,first_wrong",
+    [("b,a,churn", "b"), ("id,a,b,churn", "id")],
+    ids=["swapped", "extra_leading"],
+)
+def test_header_out_of_schema_order(spark, tmp_path, header, first_wrong):
+    """The CSV reader applies the stream schema by position, so a drop
+    whose header holds every expected column but not in the schema's
+    order would be read into the wrong columns. It is routed to
+    ``errored/`` with an audit line naming the first out-of-place
+    column, writes no metric row, and the next drop still lands."""
+    rng = random.Random(37)
+    input_dir = tmp_path / "input"
+    input_dir.mkdir()
+    bad = input_dir / "bad.csv"
+    n_cols = header.count(",") + 1
+    bad.write_text(
+        header + "\n" + "\n".join(",".join(["7"] * n_cols) for _ in range(20))
+    )
+    good = input_dir / "good.csv"
+    _write_good(good, rng)
+    # the file source takes the oldest file first
+    os.utime(bad, (1_000_000_000, 1_000_000_000))
+    os.utime(good, (1_000_000_100, 1_000_000_100))
+    alerts: list[str] = []
+    metrics_path = str(tmp_path / "metrics")
+    errored = str(tmp_path / "errored")
+
+    q = monitoring_stream(
+        spark,
+        str(input_dir),
+        SCHEMA,
+        _reference(spark, rng),
+        COLS,
+        score_fn=_score,
+        metrics_path=metrics_path,
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        errored_dir=errored,
+        alert_sink=lambda s, m: alerts.append(s),
+    )
+    q.awaitTermination(300)
+
+    assert q.exception() is None
+    metrics = spark.read.parquet(metrics_path)
+    assert metrics.where(F.col("metric_name") == "f1score").count() == 1
+    assert metrics.select("created_at").distinct().count() == 1
+    assert spark.read.parquet(errored).count() == 20
+    log = read_log(spark, f"{errored}/_logs/bad.csv.log")
+    assert len(log) == 1 and f"has {first_wrong} as column 1" in log[0]
+    assert alerts.count("Invalid input file") == 1
+
+
 def test_model_scores_each_row_once(spark, tmp_path):
     """The scored frame is cached before the predictions write, so the
     write fills the cache and monitoring reads it: the model's UDF runs
@@ -284,11 +336,10 @@ def test_model_scores_each_row_once(spark, tmp_path):
     assert calls.value == n
 
 
-# Spark jobs one valid drop may run after a warm-up drop: validate 2 (find
-# the batch's files), score+write 1, drift 4 (tie counts and their
-# distinct counts), quality+drift 2 (the metrics collect), append 2 (one
-# file per append).
-WARM_DROP_JOB_BUDGET = 11
+# Spark jobs one valid drop may run after a warm-up drop: validate 1 (the
+# batch's file name), score+write 1, quality+drift 4 (the metrics collect,
+# tie counts included), append 2 (one file per append).
+WARM_DROP_JOB_BUDGET = 8
 
 
 def test_one_warmed_drop_job_budget(spark, tmp_path):

@@ -70,16 +70,24 @@ def test_prefix_sum_matches_sequential(spark, xs):
 def test_value_drift_scalable_equals_windowed(spark, xs, ys):
     from churn_model_evaluation_platform_spark.operators.drift import value_drift
 
+    def ks(ref, cur):
+        # two-sided KS statistic, tie-correct: the ECDF gap at every value
+        n, m = len(ref), len(cur)
+        return max(
+            abs(sum(v <= x for v in ref) / n - sum(v <= x for v in cur) / m)
+            for x in set(ref) | set(cur)
+        )
+
     a = spark.createDataFrame([(float(x), float(x) * 2) for x in xs], "u double, w double")
     b = spark.createDataFrame([(float(y), float(y) * 2) for y in ys], "u double, w double")
-    cols = ["u", "w"]
-    # {c: 0} pins the window route, {} the prefix-sum route
-    windowed = value_drift(a, b, cols, {c: 0 for c in cols})
-    win = {r["column"]: r for r in windowed.collect()}
-    sca = {r["column"]: r for r in value_drift(a, b, cols, {}).collect()}
-    for c in cols:
-        assert abs(win[c]["ks_stat"] - sca[c]["ks_stat"]) < 1e-12
-        assert abs(win[c]["p_value"] - sca[c]["p_value"]) < 1e-12
+    got = {r["column"]: r for r in value_drift(a, b, ["u", "w"]).collect()}
+    sides = {
+        "u": ([float(x) for x in xs], [float(y) for y in ys]),
+        "w": ([float(x) * 2 for x in xs], [float(y) * 2 for y in ys]),
+    }
+    for c, (ref, cur) in sides.items():
+        assert abs(got[c]["ks_stat"] - ks(ref, cur)) < 1e-12
+        assert (got[c]["n_ref"], got[c]["n_cur"]) == (len(xs), len(ys))
 
 
 @SETTINGS
