@@ -17,6 +17,8 @@ import json
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..sources.lifecycle import read_text, write_text
+
 
 class LocalModelRegistry:
     """Filesystem model registry: register → alias → fetch, the
@@ -33,46 +35,25 @@ class LocalModelRegistry:
         models/<name>/v<N>/reference/     optional drift-baseline parquet
         models/<name>/aliases/<alias>.json  {"version": N}
 
-    Alias flips are small-file writes via the Hadoop FS (atomic enough
-    for the single-writer promotion flow the reference runs; a real
-    multi-writer deployment would put aliases behind a database, which
-    ``append_metrics_jdbc``'s connection layer already reaches).
+    ``meta.json`` and the alias files are read and written through the
+    Hadoop FS helpers of ``sources/lifecycle``, so ``resolve`` and
+    ``meta`` run no Spark job. An alias flip is one small-file write
+    (atomic enough for the single-writer promotion flow the reference
+    runs; a real multi-writer deployment would put aliases behind a
+    database, which ``append_metrics_jdbc``'s connection layer already
+    reaches).
     """
 
     def __init__(self, spark: SparkSession, base_dir: str):
         self.spark = spark
         self.base = base_dir.rstrip("/")
 
-    # -- small-file IO over the Hadoop FS (portable to HDFS/S3A) --
-    def _write_text(self, path: str, text: str) -> None:
-        from ..sources.lifecycle import _fs_and_path
-
-        fs, p = _fs_and_path(self.spark, path)
-        out = fs.create(p, True)
-        try:
-            out.write(bytearray(text.encode("utf-8")))
-        finally:
-            out.close()
-
-    def _read_text(self, path: str) -> str:
-        # spark.read.text, not a raw FS stream: py4j copies byte-array
-        # arguments, so Java-side reads into a Python bytearray are
-        # silently lost; a one-file text scan is correct and portable.
-        rows = self.spark.read.text(path).collect()
-        return "\n".join(r["value"] for r in rows)
-
-    def _exists(self, path: str) -> bool:
-        from ..sources.lifecycle import _fs_and_path
-
-        fs, p = _fs_and_path(self.spark, path)
-        return fs.exists(p)
-
     def _model_dir(self, name: str, version: int) -> str:
         return f"{self.base}/models/{name}/v{version}"
 
     def next_version(self, name: str) -> int:
         v = 1
-        while self._exists(f"{self._model_dir(name, v)}/meta.json"):
+        while read_text(self.spark, f"{self._model_dir(name, v)}/meta.json"):
             v += 1
         return v
 
@@ -105,28 +86,30 @@ class LocalModelRegistry:
             meta["feature_cols"] = list(feature_cols)
         if reference_df is not None:
             reference_df.write.mode("overwrite").parquet(f"{d}/reference")
-        self._write_text(f"{d}/meta.json", json.dumps(meta))
+        write_text(self.spark, f"{d}/meta.json", json.dumps(meta))
         return version
 
     def set_alias(self, name: str, alias: str, version: int) -> None:
         """Point an alias (staging/production) at a version — the
         reference's set_registered_model_alias."""
-        self._write_text(
+        write_text(
+            self.spark,
             f"{self.base}/models/{name}/aliases/{alias}.json",
             json.dumps({"version": int(version)}),
         )
 
+    def _read_json(self, path: str) -> dict:
+        text = read_text(self.spark, path)
+        if text is None:
+            raise FileNotFoundError(path)
+        return json.loads(text)
+
     def resolve(self, name: str, alias: str) -> int:
-        return int(
-            json.loads(
-                self._read_text(f"{self.base}/models/{name}/aliases/{alias}.json")
-            )["version"]
-        )
+        path = f"{self.base}/models/{name}/aliases/{alias}.json"
+        return int(self._read_json(path)["version"])
 
     def meta(self, name: str, version: int) -> dict:
-        return json.loads(
-            self._read_text(f"{self._model_dir(name, version)}/meta.json")
-        )
+        return self._read_json(f"{self._model_dir(name, version)}/meta.json")
 
     @staticmethod
     def _load_class(dotted: str):

@@ -25,7 +25,7 @@ Everything runs on the driver; the objective evaluates as Spark jobs
 call the same objective — but this sampler needs only the stdlib and is
 fully deterministic under a seed.
 
-Search-space specs (same shape as ``random_search``'s space):
+Search-space specs:
     ("int", lo, hi)        — inclusive integer range
     ("float", lo, hi)      — uniform continuous
     ("choice", [a, b, …])  — categorical
@@ -45,8 +45,7 @@ from ..schema import TARGET_COLUMN
 Spec = tuple
 Space = dict[str, Spec]
 
-# The reference's effective space shape (depth / trees / learning rate),
-# matching ml.training.random_search.
+# The reference's effective space shape (depth / trees / learning rate).
 DEFAULT_SPACE: Space = {
     "max_depth": ("int", 2, 6),
     "max_iter": ("choice", [10, 20, 40, 80]),
@@ -239,8 +238,7 @@ def tpe_search(
     study_path: str | None = None,
 ) -> tuple[dict, float, list[tuple[dict, float]]]:
     """Maximize ``objective`` over ``space`` with TPE.  Returns
-    (best_params, best_value, history) — same shape as
-    ``training.random_search``.
+    (best_params, best_value, history), history in trial order.
 
     ``study_path`` makes the study PERSISTENT and RESUMABLE (the
     engine's analog of the reference's RDB-backed Optuna study): every

@@ -13,8 +13,9 @@ xgboost/sklearn/mlflow — see SURVEY §7.2 item 5):
                           each label stratum (window function)
 - sklearn f1_score      → the engine's own confusion-matrix aggregation
                           (operators/quality.py)
-- Optuna TPE            → threshold grid + (optional) random search on
-                          the driver; trials evaluated as Spark jobs
+- Optuna TPE            → threshold grid here + the engine's own TPE
+                          sampler (``ml/tpe.py``) on the driver; trials
+                          evaluated as Spark jobs
 """
 
 from __future__ import annotations
@@ -351,44 +352,6 @@ def evaluate(
     scored = predict(tm, df)
     rows = classification_scores(scored, label_col, "churn_prediction").collect()
     return {r["metric_name"]: r["value"] for r in rows}
-
-
-def random_search(
-    df: DataFrame,
-    n_trials: int = 10,
-    k: int = 3,
-    feature_cols: list[str] | None = None,
-    label_col: str = TARGET_COLUMN,
-    seed: int = SEED,
-) -> tuple[dict, float, list[tuple[dict, float]]]:
-    """Hyperparameter search on the driver, trials evaluated as Spark
-    jobs — the engine's stand-in for the reference's Optuna TPE study
-    (churn_model_training.py:277-283; space :229-244). Optuna remains a
-    drop-in: its ``study.optimize`` objective can call
-    ``cross_validate_f1`` unchanged; seeded random search is the
-    no-extra-dependency default (and at 50 trials random search is a
-    strong TPE baseline — Bergstra & Bengio 2012).
-
-    Returns (best_params, best_f1, history). The search space mirrors
-    the reference's shape: depth, trees, learning rate.
-    """
-    import random
-
-    rng = random.Random(seed)
-    history: list[tuple[dict, float]] = []
-    best_params: dict = {}
-    best_f1 = -1.0
-    for _ in range(n_trials):
-        params = {
-            "max_depth": rng.randint(2, 6),  # reference: 3-10
-            "max_iter": rng.choice([10, 20, 40, 80]),  # n_estimators
-            "step_size": round(10 ** rng.uniform(-2, -0.5), 4),  # lr
-        }
-        f1 = cross_validate_f1(df, k, feature_cols, label_col, **params)
-        history.append((params, f1))
-        if f1 > best_f1:
-            best_params, best_f1 = params, f1
-    return best_params, best_f1, history
 
 
 def cross_validate_f1(

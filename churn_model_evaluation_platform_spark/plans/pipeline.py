@@ -14,8 +14,10 @@ Spark-first choices:
   quality;
 - the ~30 metric rows are collected once; the alert predicates run in
   Python over them, and the same rows are appended;
-- the reference dataset is small by construction (a training snapshot) —
-  it rides along via broadcast-sized DataFrame;
+- the reference dataset (a training snapshot) is melted and pooled with
+  the batch in one per-value tie-count aggregation; map-side partial
+  counts make its shuffle carry distinct values, not rows, and nothing
+  is broadcast;
 - alerts are a pluggable callback (console/file locally, SNS in cloud) —
   the reference's SNS publish (churn_prediction_pipeline.py:755-767) is a
   side-effect, not a dataflow concern.

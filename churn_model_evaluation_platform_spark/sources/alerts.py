@@ -16,9 +16,11 @@ transports behind it:
 
 All transports take (subject, message) — exactly the reference's
 ``send_sns_alert`` contract — so swapping transports never touches
-pipeline code. Message COMPOSITION (drifted-column list, failing-score
-list) mirrors the reference and lives here too so every transport sends
-the same text.
+pipeline code. ``compose_drift_alert`` and ``compose_scores_alert``
+reproduce the reference's two message texts for callers that want
+them; ``plans/pipeline.monitoring_run`` does not use them and sends its
+own shorter subjects ("Data drift detected", "Prediction scores below
+threshold"), and the monitor sends "Invalid input file".
 """
 
 from __future__ import annotations

@@ -3,17 +3,20 @@ the reference's whole S3-drop → validate → prepare → score → monitor →
 metrics-store pipeline (churn_prediction_pipeline.py:813-905) as ONE
 call over a checkpointed file stream.
 
-Failure routing mirrors the reference's folder state machine: a batch
-that fails validation is written to ``errored_dir`` with an audit-log
-line (move_to_folder semantics, :853-854,:901-905) and the run
-continues — one bad drop never stalls the stream.
+Failure routing mirrors the reference's folder state machine: a drop
+that fails validation (not a CSV key, a header missing an expected
+column, or the schema's columns out of order) is copied byte for byte
+to ``errored_dir`` with an audit-log line under ``errored_dir/_logs``
+(move_to_folder semantics, :853-854,:901-905), the "Invalid input file"
+alert fires, and the run continues — one bad drop never stalls the
+stream. The header read, the copy and the audit line go through the
+Hadoop FS helpers of ``sources/lifecycle``: no Spark job, and the same
+code for every scheme the file source reads.
 """
 
 from __future__ import annotations
 
-import csv
 from typing import Callable
-from urllib.parse import unquote, urlsplit
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
@@ -23,10 +26,11 @@ from ..operators.prep import (
     ValidationResult,
     clean_name,
     prepare,
+    validate_extension,
     validate_schema_containment,
 )
 from ..plans.pipeline import AlertSink, job_layer, monitoring_run
-from ..sources.lifecycle import append_log
+from ..sources.lifecycle import append_log, copy_file, read_csv_header
 from .file_stream import read_file_stream, run_foreach_batch
 
 ScoreFn = Callable[[DataFrame], DataFrame]
@@ -55,9 +59,10 @@ def monitoring_stream(
     file-drop stream. ``score_fn`` maps a prepared batch to a scored one
     (must add ``churn_prediction``; e.g. ``lambda b: predict(tm, b)``).
 
-    Every arriving file becomes one run: validate (cleaned-space
-    containment, then the schema's column order) → prepare → score → [predictions sink] → quality +
-    drift vs ``reference`` → metrics append → alert predicates.
+    Every arriving file becomes one run: validate (CSV key, then the
+    header's cleaned-space containment, then the schema's column order)
+    → prepare → score → [predictions sink] → quality + drift vs
+    ``reference`` → metrics append → alert predicates.
 
     ``metrics_jdbc_url`` additionally lands each micro-batch's metrics
     in a JDBC table EXACTLY-ONCE: the append is keyed by the streaming
@@ -98,29 +103,24 @@ def monitoring_stream(
         # read through a declared schema always has the declared columns,
         # so containment must be checked against what the file really
         # carries (reference reads + cleans the actual header,
-        # churn_prediction_pipeline.py:142-159). The header is parsed as
-        # CSV (quoted names) past any UTF-8 BOM, as pandas reads it. The
-        # file source names files by percent-encoded URI; a local file is
-        # read directly.
-        path = unquote(urlsplit(src).path) if src.startswith("file:") else src
-        header_cols = None
-        if path.startswith("/") and path.endswith(".csv"):
-            with open(path, encoding="utf-8-sig", errors="replace", newline="") as f:
-                header_cols = [c.strip() for c in next(csv.reader(f), [])]
-        v = validate_schema_containment(
-            header_cols if header_cols is not None else data, expected, src
-        )
-        if v.ok and header_cols is not None:
-            v = _header_order(header_cols, data.columns, src)
+        # churn_prediction_pipeline.py:142-159). A key that is not CSV is
+        # rejected first (:135-138).
+        v = validate_extension(src)
+        if v.ok:
+            header = read_csv_header(spark, src)
+            v = validate_schema_containment(header, expected, src)
+            if v.ok:
+                v = _header_order(header, data.columns, src)
         if not v.ok:
-            with job_layer(spark, "validate"):
-                if errored_dir is not None:
-                    data.write.mode("append").parquet(errored_dir)
-                    append_log(
-                        spark,
-                        f"{errored_dir}/_logs/{path.rsplit('/', 1)[-1]}.log",
-                        v.error or "validation failed",
-                    )
+            # the original file, byte for byte: a copy, not a move, since
+            # the file source owns its input and a replayed batch reads it
+            if errored_dir is not None:
+                name = copy_file(spark, src, errored_dir).rsplit("/", 1)[-1]
+                append_log(
+                    spark,
+                    f"{errored_dir}/_logs/{name}.log",
+                    v.error or "validation failed",
+                )
             if alert_sink is not None:
                 alert_sink("Invalid input file", v.error or src)
             return None

@@ -79,3 +79,22 @@ def test_promotion_flips_alias_between_versions(spark, tmp_path, trained):
     # staging and production can point at different versions
     reg.set_alias("m", "staging", v1)
     assert reg.resolve("m", "staging") == 1
+
+
+def test_resolve_and_meta_run_no_spark_job(spark, tmp_path, trained):
+    """Fetching a model by alias reads two small JSON files through the
+    Hadoop FS: neither ``resolve`` nor ``meta`` runs a Spark job."""
+    tm, _, _ = trained
+    reg = LocalModelRegistry(spark, str(tmp_path / "registry3"))
+    version = reg.register(tm.model, "m", threshold=tm.threshold)
+    reg.set_alias("m", "production", version)
+
+    sc = spark.sparkContext
+    group = f"registry-reads-{tmp_path.name}"
+    sc.setJobGroup(group, "registry reads")
+    try:
+        assert reg.resolve("m", "production") == version
+        assert reg.meta("m", version)["threshold"] == tm.threshold
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []

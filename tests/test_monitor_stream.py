@@ -296,7 +296,8 @@ def test_header_out_of_schema_order(spark, tmp_path, header, first_wrong):
     metrics = spark.read.parquet(metrics_path)
     assert metrics.where(F.col("metric_name") == "f1score").count() == 1
     assert metrics.select("created_at").distinct().count() == 1
-    assert spark.read.parquet(errored).count() == 20
+    # the original drop, byte for byte, not its rows as parsed by position
+    assert (tmp_path / "errored" / "bad.csv").read_bytes() == bad.read_bytes()
     log = read_log(spark, f"{errored}/_logs/bad.csv.log")
     assert len(log) == 1 and f"has {first_wrong} as column 1" in log[0]
     assert alerts.count("Invalid input file") == 1
@@ -370,3 +371,87 @@ def test_one_warmed_drop_job_budget(spark, tmp_path):
     metrics = spark.read.parquet(kwargs["metrics_path"])
     assert metrics.where(F.col("metric_name") == "f1score").count() == 2
     assert 0 < len(jobs) <= WARM_DROP_JOB_BUDGET, sorted(jobs)
+
+
+def _run_rejecting(spark, tmp_path, name, body):
+    """Drop one file ``name`` beside a good drop; return (query, alerts,
+    metrics path, errored dir)."""
+    rng = random.Random(41)
+    input_dir = tmp_path / "input"
+    input_dir.mkdir()
+    (input_dir / name).write_text(body)
+    _write_good(input_dir / "good.csv", rng)
+    alerts: list[str] = []
+    metrics_path = str(tmp_path / "metrics")
+    errored = tmp_path / "errored"
+    q = monitoring_stream(
+        spark,
+        str(input_dir),
+        SCHEMA,
+        _reference(spark, rng),
+        COLS,
+        score_fn=_score,
+        metrics_path=metrics_path,
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        errored_dir=str(errored),
+        alert_sink=lambda s, m: alerts.append(s),
+    )
+    q.awaitTermination(300)
+    assert q.exception() is None
+    return alerts, metrics_path, errored
+
+
+def test_upper_case_csv_missing_column_is_routed(spark, tmp_path):
+    """The header of a ``.CSV`` drop is read like any other: one that
+    lacks column ``b`` is routed to ``errored/`` as is, and only the
+    good drop lands."""
+    body = "a,churn\n1.0,0\n2.0,1\n"
+    alerts, metrics_path, errored = _run_rejecting(spark, tmp_path, "bad.CSV", body)
+
+    metrics = spark.read.parquet(metrics_path)
+    assert metrics.where(F.col("metric_name") == "f1score").count() == 1
+    assert (errored / "bad.CSV").read_text() == body
+    log = read_log(spark, f"{errored}/_logs/bad.CSV.log")
+    assert len(log) == 1 and "expected structure" in log[0].lower()
+    assert alerts.count("Invalid input file") == 1
+
+
+def test_non_csv_key_is_routed(spark, tmp_path):
+    """A key that is not CSV is rejected whatever its header holds
+    (churn_prediction_pipeline.py:135-138)."""
+    body = "a,b,churn\n1.0,2.0,0\n"
+    alerts, metrics_path, errored = _run_rejecting(spark, tmp_path, "notes.txt", body)
+
+    metrics = spark.read.parquet(metrics_path)
+    assert metrics.where(F.col("metric_name") == "f1score").count() == 1
+    assert (errored / "notes.txt").read_text() == body
+    log = read_log(spark, f"{errored}/_logs/notes.txt.log")
+    assert len(log) == 1 and "Invalid file type" in log[0]
+    assert alerts.count("Invalid input file") == 1
+
+
+def test_malformed_drop_runs_one_job(spark, tmp_path):
+    """Routing a malformed drop reads its header, copies it and writes
+    its audit line through the Hadoop FS: the only Spark job is
+    validate's ``first()`` for the batch's file name."""
+    input_dir = tmp_path / "input"
+    input_dir.mkdir()
+    (input_dir / "bad.csv").write_text("a,churn\n1.0,0\n")
+    errored = tmp_path / "errored"
+    q = monitoring_stream(
+        spark,
+        str(input_dir),
+        SCHEMA,
+        _reference(spark, random.Random(43)),
+        COLS,
+        score_fn=_score,
+        metrics_path=str(tmp_path / "metrics"),
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        errored_dir=str(errored),
+        alert_sink=lambda s, m: None,
+    )
+    q.awaitTermination(300)
+
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(str(q.runId))
+    assert len(jobs) == 1, sorted(jobs)
+    assert (errored / "bad.csv").exists()

@@ -1,10 +1,11 @@
-"""Random-search tuning loop."""
+"""The tuning loop (``tune_model_tpe``): best of history, and the same
+trial parameters under the same seed."""
 
 from __future__ import annotations
 
 import pytest
 
-from churn_model_evaluation_platform_spark.ml.training import random_search
+from churn_model_evaluation_platform_spark.ml.tpe import tune_model_tpe
 
 
 @pytest.fixture(scope="module")
@@ -24,7 +25,7 @@ def train_df(spark):
 
 
 def test_random_search_returns_best_of_history(train_df):
-    best, best_f1, hist = random_search(train_df, n_trials=2, k=2)
+    best, best_f1, hist = tune_model_tpe(train_df, n_trials=2, k=2)
     assert len(hist) == 2
     assert best_f1 == max(f1 for _, f1 in hist)
     assert best in [p for p, _ in hist]
@@ -33,6 +34,6 @@ def test_random_search_returns_best_of_history(train_df):
 
 
 def test_random_search_deterministic_params(train_df):
-    _, _, h1 = random_search(train_df, n_trials=2, k=2, seed=7)
-    _, _, h2 = random_search(train_df, n_trials=2, k=2, seed=7)
+    _, _, h1 = tune_model_tpe(train_df, n_trials=2, k=2, seed=7)
+    _, _, h2 = tune_model_tpe(train_df, n_trials=2, k=2, seed=7)
     assert [p for p, _ in h1] == [p for p, _ in h2]
