@@ -337,11 +337,13 @@ def _pinned_rotation(headline: list, history: dict, run_idx: int):
     slice:
 
     - ``SPARK_GRAFT_BENCH_QUERIES=name,name,...`` (or ``all``) — an
-      explicit active list (names outside HEADLINE are ignored);
+      explicit active list (names outside HEADLINE are ignored; a list
+      with no HEADLINE name exits with a message);
     - ``SPARK_GRAFT_ROTATION_IDX=<n>`` — the deterministic slice n:
       the fixed r1 prefix plus a (BUDGET-FIXED_N)-wide window over the
       rest of HEADLINE starting at ``(n * window) % len(rest)``, a pure
-      function of (n, HEADLINE) — stable across runs and core counts.
+      function of (n, HEADLINE) — stable across runs and core counts
+      (a non-integer n exits with a message).
 
     A pinned run does NOT advance ``bench_history``/``bench_run_idx``,
     so unpinned runs resume their LRU cycle exactly where it was.
@@ -360,10 +362,19 @@ def _pinned_rotation(headline: list, history: dict, run_idx: int):
                 if n in known and n not in seen:
                     active.append(n)
                     seen.add(n)
+            if not active:
+                sys.exit(
+                    "SPARK_GRAFT_BENCH_QUERIES names no HEADLINE query: "
+                    f"{names_env!r}"
+                )
     elif idx_env is not None:
+        try:
+            idx = int(idx_env)
+        except ValueError:
+            sys.exit(f"SPARK_GRAFT_ROTATION_IDX must be an integer, got {idx_env!r}")
         rest = headline[FIXED_N:]
         slots = min(max(BENCH_BUDGET - FIXED_N, 0), len(rest))
-        start = (int(idx_env) * slots) % len(rest) if rest else 0
+        start = (idx * slots) % len(rest) if rest else 0
         active = headline[:FIXED_N] + [
             rest[(start + j) % len(rest)] for j in range(slots)
         ]

@@ -15,9 +15,15 @@ counts ordered by value, and finish with the max absolute normalized
 difference and its asymptotic p-value. ``value_drift``, ``ks_2samp`` and
 ``value_drift_by_window`` all run that one kernel (``_ks``).
 
-The running counts come from one window per key, so one column's
-distinct values are ordered in one task, which is measured up to 10^7
-distinct values (SCALE.md §Drift statistics).
+Each drift family has one counts frame and writes each formula once:
+
+- value statistics (KS, Wasserstein, energy, Mann–Whitney) finish over
+  ``_running_counts``: one window per key over the tie counts, so one
+  column's distinct values are ordered in one task, which is measured
+  up to 10^7 distinct values (SCALE.md §Drift statistics);
+- binned statistics (PSI, JS, Hellinger, TVD) finish in ``_binned_stat``
+  over per-bin counts that ``_bins`` melts, per column or per
+  (window, column), with per-key totals clamped at 1e-12.
 
 p-values use the asymptotic Kolmogorov series (functions/stats.py) since
 scipy is deliberately not a dependency. Unit tests pin values against
@@ -34,33 +40,12 @@ from collections.abc import Iterable
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.stats import (
-    ks_pvalue_expr,
-    partitioned_prefix_sum,
-    range_boundaries,
-)
+from ..functions.stats import ks_pvalue_expr
 from .metrics import metrics_frame
 
 P_VALUE_DRIFT_THRESHOLD = 0.05  # churn_prediction_pipeline.py:419
 DATASET_DRIFT_SHARE = 0.5  # churn_prediction_pipeline.py:415
 WINDOWED_MAX_DISTINCT = 250_000  # read only by perfbench's traced install
-
-
-def _pool(
-    ref: DataFrame, cur: DataFrame, column: str, numeric: bool = True
-) -> DataFrame:
-    v = F.col(column).cast("double") if numeric else F.col(column)
-    r = ref.select(
-        v.alias("v"),
-        F.lit(1).alias("is_ref"),
-        F.lit(0).alias("is_cur"),
-    ).where(F.col("v").isNotNull())
-    c = cur.select(
-        v.alias("v"),
-        F.lit(0).alias("is_ref"),
-        F.lit(1).alias("is_cur"),
-    ).where(F.col("v").isNotNull())
-    return r.unionAll(c)
 
 
 def _long(df: DataFrame, columns: list[str], *ids: Column) -> DataFrame:
@@ -75,15 +60,14 @@ def _long(df: DataFrame, columns: list[str], *ids: Column) -> DataFrame:
 def _tie_counts(
     ref_long: DataFrame, cur_long: DataFrame, keys: list[str]
 ) -> DataFrame:
-    """Pool two long frames into one row per (keys…, v) with the
-    reference count ``r`` and current count ``c`` at v. Map-side partial
-    aggregation shrinks the shuffle to each key's cardinality, and every
+    """Pool two long frames into one row per ``keys`` value with the
+    reference count ``r`` and current count ``c`` there. Map-side partial
+    aggregation shrinks the shuffle to the keys' cardinality, and every
     later ordering sees one row per value, so ties need no special case."""
 
     def tag(df: DataFrame, is_ref: int) -> DataFrame:
         return df.select(
             *keys,
-            "v",
             F.lit(is_ref).alias("is_ref"),
             F.lit(1 - is_ref).alias("is_cur"),
         )
@@ -91,32 +75,49 @@ def _tie_counts(
     return (
         tag(ref_long, 1)
         .unionAll(tag(cur_long, 0))
-        .groupBy(*keys, "v")
+        .groupBy(*keys)
         .agg(F.sum("is_ref").alias("r"), F.sum("is_cur").alias("c"))
+    )
+
+
+def _running_counts(counts: DataFrame, keys: list[str]) -> DataFrame:
+    """The value statistics' one counts frame. Tie counts ``(keys…, v,
+    r, c)`` gain, from one window per key: the running counts
+    ``cum_r``/``cum_c`` at or below v, the key's totals ``n_ref``/
+    ``n_cur``, ``diff`` = ECDF_ref(v) − ECDF_cur(v) and ``dv``, the step
+    to the key's next distinct value (0 at its max). A key with no values
+    on one side has no ECDF there: its ``diff`` is null instead of a
+    division-by-zero error."""
+    w = Window.partitionBy(*keys).orderBy("v")  # 1 row per v → tie-safe
+    tot = Window.partitionBy(*keys)
+    cums = counts.select(
+        *keys,
+        "v",
+        "r",
+        "c",
+        F.sum("r").over(w).alias("cum_r"),
+        F.sum("c").over(w).alias("cum_c"),
+        F.sum("r").over(tot).alias("n_ref"),
+        F.sum("c").over(tot).alias("n_cur"),
+        F.lead("v").over(w).alias("v_next"),
+    )
+    n_ref, n_cur = F.col("n_ref"), F.col("n_cur")
+    return cums.select(
+        "*",
+        F.when(
+            (n_ref > 0) & (n_cur > 0),
+            F.col("cum_r") / n_ref - F.col("cum_c") / n_cur,
+        ).alias("diff"),
+        F.coalesce(F.col("v_next") - F.col("v"), F.lit(0.0)).alias("dv"),
     )
 
 
 def _ks(counts: DataFrame, keys: list[str]) -> DataFrame:
     """The KS kernel: tie counts ``(keys…, v, r, c)`` → one row per key
-    ``(keys…, ks_stat, p_value, n_ref, n_cur)``.
-
-    Running counts come from a window partitioned by the keys. A key with
-    no values on one side has no ECDF there: its ks_stat and p_value are
-    null instead of a division-by-zero error.
-    """
-    w = Window.partitionBy(*keys).orderBy("v")  # 1 row per v → tie-safe
-    tot = Window.partitionBy(*keys)
-    cums = counts.select(
-        *keys,
-        F.sum("r").over(w).alias("cum_r"),
-        F.sum("c").over(w).alias("cum_c"),
-        F.sum("r").over(tot).alias("n_ref"),
-        F.sum("c").over(tot).alias("n_cur"),
-    )
-    n_ref, n_cur = F.col("n_ref"), F.col("n_cur")
-    gap = F.abs(F.col("cum_r") / n_ref - F.col("cum_c") / n_cur)
-    stat = cums.groupBy(*keys).agg(
-        F.max(F.when((n_ref > 0) & (n_cur > 0), gap)).alias("ks_stat"),
+    ``(keys…, ks_stat, p_value, n_ref, n_cur)``; a key with one side
+    empty has a null ks_stat and p_value."""
+    stat = _running_counts(counts, keys).groupBy(*keys).agg(
+        F.max(F.abs("diff")).alias("ks_stat"),
         F.first("n_ref").alias("n_ref"),
         F.first("n_cur").alias("n_cur"),
     )
@@ -124,7 +125,8 @@ def _ks(counts: DataFrame, keys: list[str]) -> DataFrame:
     return stat.select(
         *keys,
         "ks_stat",
-        F.when(d.isNotNull(), ks_pvalue_expr(d, n_ref, n_cur)).alias("p_value"),
+        F.when(d.isNotNull(), ks_pvalue_expr(d, F.col("n_ref"), F.col("n_cur")))
+        .alias("p_value"),
         "n_ref",
         "n_cur",
     )
@@ -135,9 +137,9 @@ def tie_counts(ref: DataFrame, cur: DataFrame, columns: list[str]) -> DataFrame:
     aggregation: one row per distinct non-null value, with its reference
     and current counts. Partitioned by column, so the per-column window
     over it shuffles nothing more."""
-    keys = ["column"]
+    keys = ["column", "v"]
     return _tie_counts(_long(ref, columns), _long(cur, columns), keys).repartition(
-        *keys
+        "column"
     )
 
 
@@ -204,7 +206,16 @@ def value_drift_by_window(
     windows = cur.select(wstart).distinct()
     ref_long = _long(ref, columns).crossJoin(F.broadcast(windows))
     keys = ["window_start", "column"]
-    return _ks(_tie_counts(ref_long, _long(cur, columns, wstart), keys), keys)
+    counts = _tie_counts(ref_long, _long(cur, columns, wstart), [*keys, "v"])
+    return _ks(counts, keys)
+
+
+def _value_stat(
+    ref: DataFrame, cur: DataFrame, column: str, *aggs: Column
+) -> DataFrame:
+    """One row of ``aggs`` over ``column``'s running-counts frame (all
+    null when neither side has a non-null value)."""
+    return _running_counts(tie_counts(ref, cur, [column]), ["column"]).agg(*aggs)
 
 
 def wasserstein(ref: DataFrame, cur: DataFrame, column: str) -> DataFrame:
@@ -214,56 +225,12 @@ def wasserstein(ref: DataFrame, cur: DataFrame, column: str) -> DataFrame:
     semantic because every reference consumer reads a p-value).
 
     W1 = ∫ |ECDF_ref(v) − ECDF_cur(v)| dv, computed exactly over the
-    pooled distinct values: Σ |Δcdf(v)| · (v_next − v). Scalable shape:
-    range-bucketed prefix sums (``partitioned_prefix_sum``); the only new
-    piece is v_next — a within-bucket ``lead`` whose bucket-boundary
-    null is filled from the next bucket's min(v) (a per-bucket frame of
-    a few hundred rows, broadcast).
+    pooled distinct values: Σ |Δcdf(v)| · (v_next − v), one sum over
+    the running-counts frame that KS also reads. Null when one side has
+    no value.
     """
-    stepped = _ecdf_steps(ref, cur, column)
-    term = (
-        F.abs(
-            F.col("cum_is_ref") / F.col("tot_is_ref")
-            - F.col("cum_is_cur") / F.col("tot_is_cur")
-        )
-        * (F.col("__v_next") - F.col("v"))
-    )
-    return stepped.agg(
-        F.sum(F.when(F.col("__v_next").isNotNull(), term).otherwise(0.0)).alias(
-            "wasserstein"
-        )
-    )
-
-
-def _ecdf_steps(ref: DataFrame, cur: DataFrame, column: str) -> DataFrame:
-    """Shared ECDF step frame for the integral drift statistics
-    (wasserstein, energy): one row per pooled distinct value with both
-    sides' inclusive prefix sums, totals, and the next distinct value
-    ``__v_next`` (null on the global max). Range-bucketed prefix sums
-    (``partitioned_prefix_sum``) — no single-reducer window."""
-    raw = _pool(ref, cur, column)
-    pooled = raw.groupBy("v").agg(
-        F.sum("is_ref").alias("is_ref"), F.sum("is_cur").alias("is_cur")
-    )
-    bounds = range_boundaries(raw, "v")
-    cums = partitioned_prefix_sum(
-        pooled, "v", ["is_ref", "is_cur"], bounds=bounds, with_totals=True
-    )
-    bucket: Column = F.lit(0)
-    for b in bounds:
-        bucket = bucket + (F.col("v") > F.lit(b)).cast("int")
-    bucketed = cums.withColumn("__bucket", bucket)
-    w_b = Window.partitionBy("__bucket").orderBy("v")
-    bucket_mins = bucketed.groupBy("__bucket").agg(F.min("v").alias("__minv"))
-    w_next = Window.orderBy("__bucket")  # a few hundred rows — trivial
-    next_mins = bucket_mins.select(
-        "__bucket", F.lead("__minv").over(w_next).alias("__next_bucket_min")
-    )
-    return bucketed.join(F.broadcast(next_mins), "__bucket").select(
-        "*",
-        F.coalesce(
-            F.lead("v").over(w_b), F.col("__next_bucket_min")
-        ).alias("__v_next"),
+    return _value_stat(
+        ref, cur, column, F.sum(F.abs("diff") * F.col("dv")).alias("wasserstein")
     )
 
 
@@ -273,43 +240,167 @@ def energy_distance(
     """Energy distance between the two samples (Székely & Rizzo;
     Evidently's ``ed`` stat test, scipy.stats.energy_distance):
     E = sqrt(2 · ∫ (ECDF_ref(v) − ECDF_cur(v))² dv) — the same exact
-    pooled-distinct-value step integral as ``wasserstein`` with the
-    squared difference, so the O(n²) pairwise definition is never
-    materialized."""
-    stepped = _ecdf_steps(ref, cur, column)
-    d = (
-        F.col("cum_is_ref") / F.col("tot_is_ref")
-        - F.col("cum_is_cur") / F.col("tot_is_cur")
+    step integral over the running-counts frame as ``wasserstein`` with
+    the squared difference, so the O(n²) pairwise definition is never
+    materialized. Null when one side has no value."""
+    d = F.col("diff")
+    return _value_stat(
+        ref,
+        cur,
+        column,
+        F.sqrt(F.lit(2.0) * F.sum(d * d * F.col("dv"))).alias("energy"),
     )
-    term = d * d * (F.col("__v_next") - F.col("v"))
-    return stepped.agg(
-        F.sqrt(
-            F.lit(2.0)
-            * F.sum(
-                F.when(F.col("__v_next").isNotNull(), term).otherwise(0.0)
+
+
+def mannwhitney_u(
+    ref: DataFrame, cur: DataFrame, column: str
+) -> DataFrame:
+    """Mann–Whitney U rank test (Evidently's ``mannw`` stat test):
+    → (u_stat, z, p_approx, n_ref, n_cur). Midranks over the pooled
+    distinct values come from the running-counts frame that KS reads —
+    the tie group of t = r + c rows at value v spans ranks
+    (cum_r + cum_c − t, cum_r + cum_c], so its midrank is
+    cum_before + (t+1)/2 and R_cur = Σ c(v) · midrank(v) needs no
+    per-row ranking. U = R_cur − n_cur(n_cur+1)/2; the p-value is the
+    standard tie-corrected asymptotic normal approximation WITHOUT
+    continuity correction (documented deviation from scipy's
+    use_continuity=True default; exact same closed form on any
+    engine). All-tied inputs (zero variance) report p = 1.0."""
+    t_size = F.col("r") + F.col("c")
+    cum_before = (F.col("cum_r") + F.col("cum_c") - t_size).cast("double")
+    # cube in DOUBLE: a >2.09M-row tie group (routine for constant /
+    # low-cardinality columns at scale) overflows t³ in BIGINT — wrap
+    # under non-ANSI, throw under Spark 4's ANSI default, and diverge
+    # from the oracle, which casts before cubing (r9 review)
+    td = t_size.cast("double")
+    midrank = cum_before + (td + F.lit(1.0)) / F.lit(2.0)
+    agg = _value_stat(
+        ref,
+        cur,
+        column,
+        F.sum(F.col("c") * midrank).alias("r_cur"),
+        F.sum(td * td * td - td).alias("tie_term"),
+        F.max("n_ref").alias("n1"),
+        F.max("n_cur").alias("n2"),
+    )
+    n1 = F.col("n1").cast("double")
+    n2 = F.col("n2").cast("double")
+    n = n1 + n2
+    u = F.col("r_cur") - n2 * (n2 + F.lit(1.0)) / F.lit(2.0)
+    mean = n1 * n2 / F.lit(2.0)
+    var = (
+        n1
+        * n2
+        / F.lit(12.0)
+        * ((n + F.lit(1.0)) - F.col("tie_term") / (n * (n - F.lit(1.0))))
+    )
+    z = (u - mean) / F.sqrt(var)
+    p = F.lit(2.0) * (F.lit(1.0) - _norm_cdf_expr(F.abs(z)))
+    guarded = F.when(
+        var > 0, F.least(F.greatest(p, F.lit(0.0)), F.lit(1.0))
+    ).otherwise(F.lit(1.0))
+    return agg.select(
+        u.alias("u_stat"),
+        F.when(var > 0, z).otherwise(F.lit(0.0)).alias("z"),
+        guarded.alias("p_approx"),
+        F.col("n1").cast("bigint").alias("n_ref"),
+        F.col("n2").cast("bigint").alias("n_cur"),
+    )
+
+
+def _bins(
+    df: DataFrame, columns: dict[str, float | None], *ids: Column
+) -> DataFrame:
+    """Melt ``columns`` to ``(ids…, column, bin)`` rows, nulls dropped:
+    ``bin`` is floor(v / width), or the RAW value where the width is
+    None — the categorical form of the binned family (Evidently runs
+    chi2/TVD on category frequencies directly), string columns too."""
+    cells = F.array(
+        *[
+            F.struct(
+                F.lit(c).alias("column"),
+                (
+                    F.col(c)
+                    if w is None
+                    else F.floor(F.col(c).cast("double") / F.lit(w))
+                ).alias("bin"),
             )
-        ).alias("energy")
+            for c, w in columns.items()
+        ]
     )
+    melted = df.select(*ids, F.explode(cells).alias("cb"))
+    return melted.select(
+        *melted.columns[: len(ids)], "cb.column", "cb.bin"
+    ).where(F.col("bin").isNotNull())
 
 
 def _binned_counts(
     ref: DataFrame, cur: DataFrame, column: str, bin_width: float | None
 ) -> DataFrame:
-    """Shared fixed-width binning for the binned drift family: one row
-    per bin with both sides' counts (full-outer via conditional sums on
-    the pooled frame — a single groupBy, no join). ``bin_width=None``
-    (r9) keys by the RAW value — the CATEGORICAL form of the same
-    family (Evidently runs chi2/TVD on category frequencies directly),
-    valid for string columns too."""
-    pooled = _pool(ref, cur, column, numeric=bin_width is not None)
-    b = (
-        F.col("v")
-        if bin_width is None
-        else F.floor(F.col("v") / F.lit(bin_width)).cast("long")
+    """One column's bin counts ``(bin, n_ref, n_cur)``, both sides in one
+    groupBy over the pooled bins (no join); ``bin_width=None`` keys by
+    the raw value."""
+    cols = {column: bin_width}
+    counts = _tie_counts(_bins(ref, cols), _bins(cur, cols), ["bin"])
+    return counts.select("bin", F.col("r").alias("n_ref"), F.col("c").alias("n_cur"))
+
+
+def _with_totals(counts: DataFrame, keys: list[str]) -> DataFrame:
+    """Bin counts ``(keys…, n_ref, n_cur)`` plus each key's totals
+    ``t_ref``/``t_cur`` (one window per key; with no key, over all rows)."""
+    w = Window.partitionBy(*keys)
+    return counts.select(
+        *keys,
+        "n_ref",
+        "n_cur",
+        F.sum("n_ref").over(w).alias("t_ref"),
+        F.sum("n_cur").over(w).alias("t_cur"),
     )
-    return pooled.groupBy(b.alias("bin")).agg(
-        F.sum("is_ref").alias("n_ref"), F.sum("is_cur").alias("n_cur")
+
+
+def _binned_stat(
+    counts: DataFrame, keys: list[str], method: str, epsilon: float = 1e-6
+) -> DataFrame:
+    """The binned statistics' one finisher: bin counts ``(keys…, n_ref,
+    n_cur)`` → ``(keys…, <method>)``, one row per key (one row with no
+    key). p and q are each side's share of its key's total, the total
+    clamped at 1e-12 so an empty side yields a FINITE statistic, not a
+    NULL or a division-by-zero error (r9 review):
+
+    - ``psi``: Σ (q − p) · ln(q / p), shares floored at ``epsilon``
+      (industry convention; < 0.1 stable, > 0.25 shifted);
+    - ``js``: Jensen–Shannon, base e, in [0, ln 2]: 0.5 KL(p‖m) +
+      0.5 KL(q‖m), m = (p+q)/2, with 0·log 0 = 0;
+    - ``hellinger``: sqrt(0.5 · Σ (√p − √q)²) ∈ [0, 1];
+    - ``tvd``: 0.5 · Σ |p − q| ∈ [0, 1].
+    """
+    j = _with_totals(counts, keys)
+    p = F.col("n_ref").cast("double") / F.greatest(
+        F.col("t_ref").cast("double"), F.lit(1e-12)
     )
+    q = F.col("n_cur").cast("double") / F.greatest(
+        F.col("t_cur").cast("double"), F.lit(1e-12)
+    )
+    if method == "psi":
+        p_ref, p_cur = F.greatest(p, F.lit(epsilon)), F.greatest(q, F.lit(epsilon))
+        stat = F.sum((p_cur - p_ref) * F.log(p_cur / p_ref))
+    elif method == "js":
+        m = (p + q) / F.lit(2.0)
+        stat = F.sum(
+            F.when(p > 0, F.lit(0.5) * p * F.log(p / m)).otherwise(F.lit(0.0))
+            + F.when(q > 0, F.lit(0.5) * q * F.log(q / m)).otherwise(F.lit(0.0))
+        )
+    elif method == "hellinger":
+        d = F.sqrt(p) - F.sqrt(q)
+        stat = F.sqrt(F.lit(0.5) * F.sum(d * d))
+    elif method == "tvd":
+        stat = F.lit(0.5) * F.sum(F.abs(p - q))
+    else:
+        raise ValueError(
+            f"unknown binned drift method {method!r}; "
+            "expected psi|hellinger|tvd|js"
+        )
+    return j.groupBy(*keys).agg(stat.alias(method))
 
 
 def psi(
@@ -319,20 +410,10 @@ def psi(
     bin_width: float | None,
     epsilon: float = 1e-6,
 ) -> DataFrame:
-    """Population Stability Index over fixed-width bins:
-    Σ (p_cur - p_ref) * ln(p_cur / p_ref), zero-count bins floored at
-    ``epsilon`` (industry convention; < 0.1 stable, > 0.25 shifted).
-    One groupBy + one scalar aggregation — same shape at any scale.
-    """
-    counts = _binned_counts(ref, cur, column, bin_width)
-    tot = counts.agg(
-        F.sum("n_ref").alias("t_ref"), F.sum("n_cur").alias("t_cur")
-    )
-    j = counts.crossJoin(F.broadcast(tot))
-    p_ref = F.greatest(F.col("n_ref") / F.col("t_ref"), F.lit(epsilon))
-    p_cur = F.greatest(F.col("n_cur") / F.col("t_cur"), F.lit(epsilon))
-    term = (p_cur - p_ref) * F.log(p_cur / p_ref)
-    return j.agg(F.sum(term).alias("psi"))
+    """Population Stability Index over fixed-width bins (``_binned_stat``):
+    one groupBy of the bin counts and one scalar aggregation — same
+    shape at any scale."""
+    return _binned_stat(_binned_counts(ref, cur, column, bin_width), [], "psi", epsilon)
 
 
 def binned_ref_counts(
@@ -342,19 +423,8 @@ def binned_ref_counts(
     streaming-capable PSI drift panel: ``columns`` maps column name →
     fixed bin width. Computed once per reference snapshot (broadcast-
     sized by platform design) and reused across every window/batch."""
-    cols = F.array(
-        *[
-            F.struct(
-                F.lit(c).alias("column"),
-                F.floor(F.col(c).cast("double") / F.lit(w)).alias("bin"),
-            )
-            for c, w in columns.items()
-        ]
-    )
     return (
-        ref.select(F.explode(cols).alias("cb"))
-        .select("cb.column", "cb.bin")
-        .where(F.col("bin").isNotNull())
+        _bins(ref, columns)
         .groupBy("column", "bin")
         .agg(F.count(F.lit(1)).alias("n_ref"))
     )
@@ -384,22 +454,9 @@ def binned_window_counts(
     ``binned_window_counts_append`` (tumbling ``F.window`` keys,
     append-mode capable); same output schema, so ``psi_from_binned``
     finishes either one."""
-    cols = F.array(
-        *[
-            F.struct(
-                F.lit(c).alias("column"),
-                F.floor(F.col(c).cast("double") / F.lit(w)).alias("bin"),
-            )
-            for c, w in columns.items()
-        ]
-    )
+    wstart = F.date_trunc(unit, F.col(ts_col)).alias("window_start")
     return (
-        cur.select(
-            F.date_trunc(unit, F.col(ts_col)).alias("window_start"),
-            F.explode(cols).alias("cb"),
-        )
-        .select("window_start", "cb.column", "cb.bin")
-        .where(F.col("bin").isNotNull())
+        _bins(cur, columns, wstart)
         .groupBy("window_start", "column", "bin")
         .agg(F.count(F.lit(1)).alias("n_cur"))
     )
@@ -424,22 +481,9 @@ def binned_window_counts_append(
     windows, not ISO weeks — use it where bounded state matters more
     than calendar alignment (proven equivalent per-window in
     tests/test_stream_drift.py)."""
-    cols = F.array(
-        *[
-            F.struct(
-                F.lit(c).alias("column"),
-                F.floor(F.col(c).cast("double") / F.lit(w)).alias("bin"),
-            )
-            for c, w in columns.items()
-        ]
-    )
     return (
-        cur.select(F.col(ts_col), F.explode(cols).alias("cb"))
-        .select(ts_col, "cb.column", "cb.bin")
-        .where(F.col("bin").isNotNull())
-        .groupBy(
-            F.window(ts_col, window_duration).alias("w"), "column", "bin"
-        )
+        _bins(cur, columns, F.col(ts_col))
+        .groupBy(F.window(ts_col, window_duration).alias("w"), "column", "bin")
         .agg(F.count(F.lit(1)).alias("n_cur"))
         .select(
             F.col("w.start").alias("window_start"), "column", "bin", "n_cur"
@@ -458,43 +502,26 @@ def psi_from_binned(
     by the batch plan and the streaming drain (registry
     ``value_drift_psi_window`` / ``stream_value_drift``), which is what
     makes the drain == batch proof an identity of inputs, not a
-    coincidence of two implementations.
-
-    All frames here are bin-count sized (windows × columns × bins) —
-    the 100 TB data only ever flows through ``binned_window_counts``.
-    The full-outer join keeps ref-only bins (p_cur floored at
-    ``epsilon``) and cur-only bins (p_ref floored) alike. Totals are
-    clamped with greatest(·, 1e-12) before dividing so a (window,
-    column) slice with zero rows stays finite and cross-engine
-    identical (0/0 is NULL on Spark but NaN on DuckDB); ln() is libm-
-    dependent → the final sum is rounded on both engines."""
-    joined, p, q = _window_joined_pq(ref_bins, cur_bins)
-    p_ref = F.greatest(p, F.lit(epsilon))
-    p_cur = F.greatest(q, F.lit(epsilon))
-    term = (p_cur - p_ref) * F.log(p_cur / p_ref)
-    return (
-        joined.select("window_start", "column", term.alias("term"))
-        .groupBy("window_start", "column")
-        .agg(F.round(F.sum("term"), round_to).alias("psi"))
-    )
+    coincidence of two implementations. ``stat_from_binned`` with
+    ``method="psi"``."""
+    return stat_from_binned(ref_bins, cur_bins, "psi", epsilon, round_to)
 
 
-def _window_joined_pq(ref_bins: DataFrame, cur_bins: DataFrame):
-    """Shared (window_start, column, bin) -> clamped (p, q) scaffolding
-    for the windowed-panel finishers — ONE definition so a fix to the
-    join or the clamp applies to every statistic (r9 review). The alias
-    hop mints fresh attribute ids so base-vs-cur_bins is not a
-    self-join on the same plan (memory-sink sources otherwise hit
-    "conflicting references" in the full-outer join below)."""
-    from pyspark.sql import Window as W
-
+def _window_bins(ref_bins: DataFrame, cur_bins: DataFrame) -> DataFrame:
+    """``(window_start, column, n_ref, n_cur)`` per bin: the static
+    reference bins replicated to every window of ``cur_bins`` and full-
+    outer joined on (window_start, column, bin), so ref-only and cur-only
+    bins both count (missing side 0). The alias hop mints fresh attribute
+    ids so base-vs-cur_bins is not a self-join on the same plan
+    (memory-sink sources otherwise hit "conflicting references" in the
+    full-outer join below)."""
     windows = (
         cur_bins.select(F.col("window_start").alias("__w"))
         .distinct()
         .withColumnRenamed("__w", "window_start")
     )
     base = ref_bins.crossJoin(F.broadcast(windows))
-    joined = base.join(
+    return base.join(
         cur_bins, ["window_start", "column", "bin"], "full_outer"
     ).select(
         "window_start",
@@ -502,14 +529,6 @@ def _window_joined_pq(ref_bins: DataFrame, cur_bins: DataFrame):
         F.coalesce("n_ref", F.lit(0)).alias("n_ref"),
         F.coalesce("n_cur", F.lit(0)).alias("n_cur"),
     )
-    w = W.partitionBy("window_start", "column")
-    p = F.col("n_ref").cast("double") / F.greatest(
-        F.sum("n_ref").over(w).cast("double"), F.lit(1e-12)
-    )
-    q = F.col("n_cur").cast("double") / F.greatest(
-        F.sum("n_cur").over(w).cast("double"), F.lit(1e-12)
-    )
-    return joined, p, q
 
 
 def stat_from_binned(
@@ -526,37 +545,14 @@ def stat_from_binned(
     ``binned_window_counts_append`` produce, so every one of them
     STREAMS with the identical bounded state (the statistic choice
     costs nothing at the stateful layer — it is pure arithmetic over
-    the drained counts). Output ``(window_start, column, <method>)``.
-    ``epsilon`` applies to ``psi`` only (hellinger/tvd/js are finite on
-    zero bins by construction); totals are clamped at 1e-12 everywhere
-    so an empty (window, column) slice stays finite and cross-engine
-    identical."""
-    if method == "psi":
-        return psi_from_binned(ref_bins, cur_bins, epsilon, round_to)
-    if method not in ("hellinger", "tvd", "js"):
-        raise ValueError(
-            f"unknown binned drift method {method!r}; "
-            "expected psi|hellinger|tvd|js"
-        )
-    joined, p, q = _window_joined_pq(ref_bins, cur_bins)
-    if method == "hellinger":
-        d = F.sqrt(p) - F.sqrt(q)
-        term, finish = d * d, lambda s: F.sqrt(F.lit(0.5) * s)
-    elif method == "tvd":
-        term, finish = F.abs(p - q), lambda s: F.lit(0.5) * s
-    else:  # js
-        m = (p + q) / F.lit(2.0)
-        term = F.when(p > 0, F.lit(0.5) * p * F.log(p / m)).otherwise(
-            F.lit(0.0)
-        ) + F.when(q > 0, F.lit(0.5) * q * F.log(q / m)).otherwise(
-            F.lit(0.0)
-        )
-        finish = lambda s: s  # noqa: E731
-    return (
-        joined.select("window_start", "column", term.alias("term"))
-        .groupBy("window_start", "column")
-        .agg(F.round(finish(F.sum("term")), round_to).alias(method))
-    )
+    the drained counts). Output ``(window_start, column, <method>)``,
+    rounded at ``round_to`` (ln() is libm-dependent, so both engines
+    round). ``epsilon`` applies to ``psi`` only; totals are clamped at
+    1e-12 per (window, column), so an empty slice stays finite and
+    cross-engine identical (0/0 is NULL on Spark but NaN on DuckDB)."""
+    keys = ["window_start", "column"]
+    stat = _binned_stat(_window_bins(ref_bins, cur_bins), keys, method, epsilon)
+    return stat.select(*keys, F.round(method, round_to).alias(method))
 
 
 def value_drift_psi_by_window(
@@ -588,19 +584,8 @@ def js_divergence(
     ref: DataFrame, cur: DataFrame, column: str, bin_width: float | None
 ) -> DataFrame:
     """Jensen–Shannon divergence (base e, in [0, ln 2]) between the two
-    binned distributions: JS = 0.5 KL(p||m) + 0.5 KL(q||m), m=(p+q)/2.
-    Zero-count bins contribute 0 by the 0·log0 = 0 convention."""
-    counts = _binned_counts(ref, cur, column, bin_width)
-    tot = counts.agg(
-        F.sum("n_ref").alias("t_ref"), F.sum("n_cur").alias("t_cur")
-    )
-    j = counts.crossJoin(F.broadcast(tot))
-    p = F.col("n_ref") / F.col("t_ref")
-    q = F.col("n_cur") / F.col("t_cur")
-    m = (p + q) / F.lit(2.0)
-    kl_p = F.when(p > 0, p * F.log(p / m)).otherwise(F.lit(0.0))
-    kl_q = F.when(q > 0, q * F.log(q / m)).otherwise(F.lit(0.0))
-    return j.agg((F.lit(0.5) * F.sum(kl_p) + F.lit(0.5) * F.sum(kl_q)).alias("js"))
+    binned distributions (``_binned_stat``)."""
+    return _binned_stat(_binned_counts(ref, cur, column, bin_width), [], "js")
 
 
 def chi2_drift(
@@ -616,10 +601,7 @@ def chi2_drift(
 
 
 def chi2_from_counts(counts: DataFrame) -> DataFrame:
-    tot = counts.agg(
-        F.sum("n_ref").alias("t_ref"), F.sum("n_cur").alias("t_cur")
-    )
-    j = counts.crossJoin(F.broadcast(tot))
+    j = _with_totals(counts, [])
     row_tot = F.col("n_ref") + F.col("n_cur")
     grand = F.col("t_ref") + F.col("t_cur")
     e_ref = row_tot * F.col("t_ref") / grand
@@ -659,117 +641,31 @@ def chi2_from_counts(counts: DataFrame) -> DataFrame:
     )
 
 
-def _counts_with_totals(counts: DataFrame) -> tuple[DataFrame, Column, Column]:
-    """Shared finisher input for the binned distances: the counts frame
-    crossed with its single-row totals, plus the clamped probability
-    expressions (totals floored at 1e-12 per the repo's zero-division
-    convention — an empty or all-null side yields a FINITE zero-measure
-    statistic, not a NULL a monitoring threshold silently ignores;
-    r9 review)."""
-    tot = counts.agg(
-        F.sum("n_ref").alias("t_ref"), F.sum("n_cur").alias("t_cur")
-    )
-    j = counts.crossJoin(F.broadcast(tot))
-    p = F.col("n_ref").cast("double") / F.greatest(
-        F.col("t_ref").cast("double"), F.lit(1e-12)
-    )
-    q = F.col("n_cur").cast("double") / F.greatest(
-        F.col("t_cur").cast("double"), F.lit(1e-12)
-    )
-    return j, p, q
-
-
 def hellinger_from_counts(counts: DataFrame) -> DataFrame:
-    j, p, q = _counts_with_totals(counts)
-    d = F.sqrt(p) - F.sqrt(q)
-    return j.agg(F.sqrt(F.lit(0.5) * F.sum(d * d)).alias("hellinger"))
+    return _binned_stat(counts, [], "hellinger")
 
 
 def hellinger(
     ref: DataFrame, cur: DataFrame, column: str, bin_width: float | None
 ) -> DataFrame:
     """Hellinger distance between the two binned distributions
-    (Evidently's ``hellinger`` stat test): H = sqrt(0.5 · Σ (sqrt(p) −
-    sqrt(q))²) ∈ [0, 1]. Zero-count bins contribute their full
-    sqrt-mass difference — no epsilon floor needed (the statistic is
-    finite by construction). Same one-groupBy shape as ``psi``."""
+    (Evidently's ``hellinger`` stat test, ``_binned_stat``). Zero-count
+    bins contribute their full sqrt-mass difference — no epsilon floor
+    needed (the statistic is finite by construction). Same one-groupBy
+    shape as ``psi``."""
     return hellinger_from_counts(_binned_counts(ref, cur, column, bin_width))
 
 
 def tvd_from_counts(counts: DataFrame) -> DataFrame:
-    j, p, q = _counts_with_totals(counts)
-    return j.agg((F.lit(0.5) * F.sum(F.abs(p - q))).alias("tvd"))
+    return _binned_stat(counts, [], "tvd")
 
 
 def tvd(
     ref: DataFrame, cur: DataFrame, column: str, bin_width: float | None
 ) -> DataFrame:
     """Total variation distance between the two binned distributions
-    (Evidently's ``TVD`` stat test): 0.5 · Σ |p − q| ∈ [0, 1]."""
+    (Evidently's ``TVD`` stat test, ``_binned_stat``)."""
     return tvd_from_counts(_binned_counts(ref, cur, column, bin_width))
-
-
-def mannwhitney_u(
-    ref: DataFrame, cur: DataFrame, column: str
-) -> DataFrame:
-    """Mann–Whitney U rank test (Evidently's ``mannw`` stat test):
-    → (u_stat, z, p_approx, n_ref, n_cur). Midranks over the pooled
-    distinct values come from the same range-bucketed prefix sums as
-    ``wasserstein`` — the tie group at value v spans ranks
-    (count below v, count at-or-below v], so its midrank is
-    cum_before + (t+1)/2 and R_cur = Σ n_cur(v) · midrank(v) needs no
-    per-row ranking. U = R_cur − n_cur(n_cur+1)/2; the p-value is the
-    standard tie-corrected asymptotic normal approximation WITHOUT
-    continuity correction (documented deviation from scipy's
-    use_continuity=True default; exact same closed form on any
-    engine). All-tied inputs (zero variance) report p = 1.0."""
-    raw = _pool(ref, cur, column)
-    pooled = raw.groupBy("v").agg(
-        F.sum("is_ref").alias("is_ref"), F.sum("is_cur").alias("is_cur")
-    )
-    bounds = range_boundaries(raw, "v")
-    cums = partitioned_prefix_sum(
-        pooled, "v", ["is_ref", "is_cur"], bounds=bounds, with_totals=True
-    )
-    t_size = F.col("is_ref") + F.col("is_cur")
-    cum_before = (
-        F.col("cum_is_ref") + F.col("cum_is_cur") - t_size
-    ).cast("double")
-    midrank = cum_before + (t_size.cast("double") + F.lit(1.0)) / F.lit(2.0)
-    # cube in DOUBLE: a >2.09M-row tie group (routine for constant /
-    # low-cardinality columns at scale) overflows t³ in BIGINT — wrap
-    # under non-ANSI, throw under Spark 4's ANSI default, and diverge
-    # from the oracle, which casts before cubing (r9 review)
-    td = t_size.cast("double")
-    agg = cums.agg(
-        F.sum(F.col("is_cur") * midrank).alias("r_cur"),
-        F.sum(td * td * td - td).alias("tie_term"),
-        F.max("tot_is_ref").alias("n1"),
-        F.max("tot_is_cur").alias("n2"),
-    )
-    n1 = F.col("n1").cast("double")
-    n2 = F.col("n2").cast("double")
-    n = n1 + n2
-    u = F.col("r_cur") - n2 * (n2 + F.lit(1.0)) / F.lit(2.0)
-    mean = n1 * n2 / F.lit(2.0)
-    var = (
-        n1
-        * n2
-        / F.lit(12.0)
-        * ((n + F.lit(1.0)) - F.col("tie_term") / (n * (n - F.lit(1.0))))
-    )
-    z = (u - mean) / F.sqrt(var)
-    p = F.lit(2.0) * (F.lit(1.0) - _norm_cdf_expr(F.abs(z)))
-    guarded = F.when(
-        var > 0, F.least(F.greatest(p, F.lit(0.0)), F.lit(1.0))
-    ).otherwise(F.lit(1.0))
-    return agg.select(
-        u.alias("u_stat"),
-        F.when(var > 0, z).otherwise(F.lit(0.0)).alias("z"),
-        guarded.alias("p_approx"),
-        F.col("n1").cast("bigint").alias("n_ref"),
-        F.col("n2").cast("bigint").alias("n_cur"),
-    )
 
 
 def _norm_cdf_expr(z: Column) -> Column:

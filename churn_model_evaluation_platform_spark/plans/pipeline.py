@@ -30,7 +30,7 @@ from contextlib import contextmanager
 from dataclasses import dataclass, field
 from typing import Callable
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.drift import (
@@ -46,7 +46,6 @@ from ..operators.quality import (
     per_label_scores,
     quality_scores,
 )
-from ..schema import TARGET_COLUMN, TARGET_PREDICTION_COLUMN
 
 AlertSink = Callable[[str, str], None]
 
@@ -84,17 +83,15 @@ def monitoring_run(
     current: DataFrame,
     reference: DataFrame,
     feature_cols: list[str],
-    actual_col: str = TARGET_COLUMN,
-    predicted_col: str = TARGET_PREDICTION_COLUMN,
-    created_at: Column | None = None,
     alert_sink: AlertSink | None = None,
-    score_threshold: float = 0.70,
 ) -> MonitoringResult:
     """Compute the full metrics set for one scored batch and evaluate the
     reference's alert predicates (churn_prediction_pipeline.py:864-896).
 
-    ``current`` must already carry ``actual_col`` + ``predicted_col``
-    (the output of scoring). One Spark action collects the metric rows.
+    ``current`` must already carry ``schema.TARGET_COLUMN`` +
+    ``schema.TARGET_PREDICTION_COLUMN`` (the output of scoring). One Spark
+    action collects the metric rows, stamped with one
+    ``current_timestamp()``; scores alert below the reference's 0.70.
     Returns those rows as the long-format metrics DataFrame
     (metric_name, value, created_at) ready for the append sink.
     """
@@ -105,7 +102,7 @@ def monitoring_run(
     current = current.cache()
     try:
         drift = value_drift(reference, current, feature_cols)
-        metrics = quality_scores(current, actual_col, predicted_col).unionAll(
+        metrics = quality_scores(current).unionAll(
             drift.select(
                 F.concat(F.lit("valuedrift_"), F.col("column")).alias("metric_name"),
                 F.col("p_value").alias("value"),
@@ -113,7 +110,7 @@ def monitoring_run(
         )
         # the run's one timestamp travels as epoch micros: exact, and free
         # of the driver's local time zone
-        metrics = with_created_at(metrics, created_at).select(
+        metrics = with_created_at(metrics).select(
             "metric_name", "value", F.unix_micros("created_at").alias("created_us")
         )
         with job_layer(spark, "quality+drift"):
@@ -126,7 +123,7 @@ def monitoring_run(
         [v for name, v in rows if name.startswith("valuedrift_")]
     )
     drifted, n_drifted, drifted_cols = assess_data_drift(rows)
-    scores_alert, failing = assess_prediction_scores(rows, score_threshold)
+    scores_alert, failing = assess_prediction_scores(rows)
     sink = alert_sink or console_alert_sink
     if drifted:
         sink(

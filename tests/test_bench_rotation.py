@@ -5,6 +5,8 @@ runs."""
 
 from __future__ import annotations
 
+import pytest
+
 import bench
 
 
@@ -121,3 +123,15 @@ def test_bench_queries_env_list_and_all(monkeypatch):
     active, deferred, *_ = bench.select_rotation(bench.HEADLINE, _detail())
     assert active == list(bench.HEADLINE)
     assert deferred == []
+
+
+def test_rotation_idx_not_an_integer_exits_naming_the_variable(monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_ROTATION_IDX", "three")
+    with pytest.raises(SystemExit, match="SPARK_GRAFT_ROTATION_IDX"):
+        bench.select_rotation(bench.HEADLINE, _detail())
+
+
+def test_bench_queries_matching_no_headline_name_exits(monkeypatch):
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_QUERIES", "not_a_query, nor_this")
+    with pytest.raises(SystemExit, match="SPARK_GRAFT_BENCH_QUERIES"):
+        bench.select_rotation(bench.HEADLINE, _detail())

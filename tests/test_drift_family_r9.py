@@ -233,6 +233,8 @@ def test_hellinger_tvd_finite_on_empty_side(spark):
     threshold silently ignores."""
     from churn_model_evaluation_platform_spark.operators.drift import (
         hellinger,
+        js_divergence,
+        psi,
         tvd,
     )
 
@@ -243,3 +245,12 @@ def test_hellinger_tvd_finite_on_empty_side(spark):
     assert h is not None and t is not None
     assert h == pytest.approx(math.sqrt(0.5), abs=1e-12)  # sum q = 1
     assert t == pytest.approx(0.5, abs=1e-12)
+    # q = (2/3, 1/3) against p = 0 floored at epsilon = 1e-6
+    want_psi = sum((q - 1e-6) * math.log(q / 1e-6) for q in (2 / 3, 1 / 3))
+    assert psi(empty, cur, "value", 10.0).first()["psi"] == pytest.approx(
+        want_psi, abs=1e-9
+    )
+    # m = q / 2 on every bin: JS = 0.5 * KL(q || q/2) = 0.5 * ln 2
+    assert js_divergence(empty, cur, "value", 10.0).first()[
+        "js"
+    ] == pytest.approx(0.5 * math.log(2.0), abs=1e-12)

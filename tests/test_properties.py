@@ -6,6 +6,8 @@ real Spark jobs.
 
 from __future__ import annotations
 
+import math
+
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
@@ -88,6 +90,50 @@ def test_value_drift_scalable_equals_windowed(spark, xs, ys):
     for c, (ref, cur) in sides.items():
         assert abs(got[c]["ks_stat"] - ks(ref, cur)) < 1e-12
         assert (got[c]["n_ref"], got[c]["n_cur"]) == (len(xs), len(ys))
+
+
+# a small value set makes ties common; min_size=1 lets a side be one value
+tied_sample = st.lists(
+    st.sampled_from([-2.0, 0.0, 0.5, 1.0, 3.0]), min_size=1, max_size=12
+)
+
+
+@settings(max_examples=15, deadline=None)
+@given(tied_sample, tied_sample)
+def test_value_stats_match_python_model(spark, xs, ys):
+    from churn_model_evaluation_platform_spark.operators.drift import (
+        energy_distance,
+        mannwhitney_u,
+        wasserstein,
+    )
+
+    vals = sorted(set(xs) | set(ys))
+    n, m, pooled = len(xs), len(ys), xs + ys
+
+    def gap(v):
+        return sum(x <= v for x in xs) / n - sum(y <= v for y in ys) / m
+
+    steps = list(zip(vals, vals[1:]))
+    w1 = sum(abs(gap(v)) * (nxt - v) for v, nxt in steps)
+    energy = math.sqrt(2.0 * sum(gap(v) ** 2 * (nxt - v) for v, nxt in steps))
+    # midrank of a tie group of t pooled rows at v: below(v) + (t + 1) / 2
+    midrank = {
+        v: sum(p < v for p in pooled) + (pooled.count(v) + 1) / 2 for v in vals
+    }
+    u = sum(midrank[y] for y in ys) - m * (m + 1) / 2
+    tie = sum(pooled.count(v) ** 3 - pooled.count(v) for v in vals)
+    big_n = n + m
+    var = n * m / 12 * ((big_n + 1) - tie / (big_n * (big_n - 1)))
+    z = (u - n * m / 2) / math.sqrt(var) if var > 0 else 0.0
+
+    a = spark.createDataFrame([(x,) for x in xs], "v double")
+    b = spark.createDataFrame([(y,) for y in ys], "v double")
+    assert abs(wasserstein(a, b, "v").first()["wasserstein"] - w1) < 1e-9
+    assert abs(energy_distance(a, b, "v").first()["energy"] - energy) < 1e-9
+    row = mannwhitney_u(a, b, "v").first()
+    assert abs(row["u_stat"] - u) < 1e-9
+    assert abs(row["z"] - z) < 1e-9
+    assert (row["n_ref"], row["n_cur"]) == (n, m)
 
 
 @SETTINGS

@@ -34,10 +34,6 @@ from churn_model_evaluation_platform_spark.session import get_spark  # noqa: E40
 # cross join: a single-row aggregate or literal frame crossed into every
 # row (the build side is 1 row by construction).
 SINGLE_ROW_CROSS_OK = {
-    "value_drift_wasserstein",
-    "value_drift_psi",
-    "value_drift_js",
-    "value_drift_chi2",
     "assess_data_drift",
     "duplicate_row_count",
     "dedup_ngram_jaccard",  # sizes frame joined back is small but keyed
@@ -46,7 +42,6 @@ SINGLE_ROW_CROSS_OK = {
     "tfidf_top_terms",  # single-row corpus-size broadcast
     "lm_score",  # single-row (T, V) totals broadcast
     "bm25_search",  # single-row (n_docs, avgdl) corpus-stats broadcast
-    "txnlog_version_drift",  # psi's single-row bin-totals broadcast
     # deliberate replicate-small-dim cross: the broadcast build side is
     # the distinct window-start frame (dashboard x-axis grain — tens to
     # hundreds of rows) crossed into the broadcast-sized reference
@@ -74,24 +69,19 @@ SINGLE_ROW_CROSS_OK = {
     "drift_mahalanobis",
     # single-row (n,k) and single-row q_hat aggregates broadcast in
     "conformal_coverage",
-    # r9 drift/eval additions — all the same single-row grand-totals
-    # broadcast pattern as their family (psi/wasserstein/auc_roc):
-    "value_drift_hellinger_tvd",  # bin-totals cross + 1-row x 1-row
-    "value_drift_energy",  # prefix-sum with_totals single-row cross
-    "value_drift_mannwhitney",  # prefix-sum with_totals single-row cross
+    # r9 drift/eval additions:
+    "value_drift_hellinger_tvd",  # two one-row statistics crossed into one row
     "auc_pr",  # single-row grand-totals broadcast (with_totals)
     "value_drift_hellinger_window",  # value_drift_by_window's pattern
     "stream_value_drift_hellinger",  # same panel finisher, drained counts
-    "value_drift_categorical",  # bin-totals cross + 1-row x 1-row
+    "value_drift_categorical",  # two one-row statistics crossed into one row
     # single-row quartile aggregate broadcast into the outlier pass
     "robust_scale_stats",
     # single-row edge-count aggregate broadcast into the degree-balance sum
     "graph_modularity",
-    # wasserstein branch: single-row (t_ref, t_cur) totals crossed in
-    "value_drift_auto",
     # tiny distinct-windows frame (dashboard x-axis grain) broadcast-
     # crossed into the bin-count-sized ref_bins — both sides bounded by
-    # bins × windows, never data (operators/drift.py:psi_from_binned)
+    # bins × windows, never data (operators/drift.py:_window_bins)
     "value_drift_psi_window",
     "stream_value_drift",
     # r12 selection family — the same single-row grand-totals
